@@ -62,7 +62,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     // nosort is a secondary diagnostic (sort-contamination signal + the
     // ratio table's numerator); one pass by default keeps the full-suite
@@ -78,37 +77,27 @@ object Bench {
     // SparkEntry/Verify sessions and every plan-shape spec — keeps the wide
     // default. Override with SPARK_GRAFT_SHUFFLE=32 to reproduce the old
     // basis.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", DefaultShuffle)
+    //
     // Scan-split size (default 128 MB, Spark's own default). At sf1 the
     // amplified single-file tables are 30-150 MB — the default would scan
     // each as 1-2 tasks and serialize CPU-heavy text scans; an operator
     // sizes maxPartitionBytes to the cluster exactly like shuffle width
     // (SCALING.md). Recorded in the output when overridden.
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", DefaultMaxPartitionBytes)
+    //
     // openCostInBytes FLOORS the split size at 4 MB by default — for
     // high-compression CPU-heavy columns (text at ~7:1) a 5 MB parquet file
     // is 40 MB of decompressed scan work, and the byte heuristic would run
     // it as one task. Sized together with maxPartitionBytes (SCALING.md).
-    val openCost = sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", DefaultOpenCost)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.files.openCostInBytes", openCost)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local[32] runs driver + all executor threads in ONE JVM: a long GC
-      // or a CPU-saturated stretch can starve the heartbeat thread past the
-      // 120 s default and the HeartbeatReceiver then kills the only
-      // "executor" (observed at sf1: 126 s gap → context shutdown). The
-      // same settings are standard practice on real clusters for long-pause
-      // workloads.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("graft-bench", DefaultShuffle.toInt, Map(
+      "spark.sql.files.maxPartitionBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", DefaultMaxPartitionBytes),
+      "spark.sql.files.openCostInBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", DefaultOpenCost)))
+    // The EFFECTIVE session values (SPARK_GRAFT_SHUFFLE overrides the width
+    // inside Sessions): what the artifact records and the basis gate checks.
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    val maxPart = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    val openCost = spark.conf.get("spark.sql.files.openCostInBytes")
     System.err.println(s"[bench] heap max=${Runtime.getRuntime.maxMemory / (1 << 20)} MiB" +
       s" sfDir=$sfDir shuffle=$shuffle maxPartitionBytes=$maxPart openCost=$openCost")
 

@@ -190,15 +190,7 @@ object ScaleSmoke {
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_SCALE_DST", "/tmp/graft_scale")
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("graft-scale-smoke", 32)
 
     // A marker file records the copies count the dst was synthesized with;
     // a dst left over from a run with a DIFFERENT SPARK_GRAFT_COPIES would

@@ -17,7 +17,7 @@ import graft.functions.Exprs
   *  2. `net_revenue_eur = gross + refunds` (refund amounts are negative);
   *  3. refunds are aggregated over ALL refunds before any filtering;
   *  4. `is_active === true` drops null (unmatched-customer) rows;
-  *  5. rejects are counted, then written only when count > 0;
+  *  5. rejects are collected once and written only when rows came back;
   *  6. dates stay strings; `order_date` is derived after the active join
   *     with the fail-fast two-format parse (U2 strict).
   *
@@ -93,7 +93,7 @@ object SalesPipeline {
         col("item.qty").as("item_qty"),
         col("item.unit_price").as("item_unit_price"))
 
-  /** P4 — negative-price rejects (observed via count, conditionally written;
+  /** P4 — negative-price rejects (collected once, written only when present;
     * reference `:123-131`). Returns (rejects, kept-complement).
     */
   def rejectsSplit(flat: DataFrame): (DataFrame, DataFrame) =
@@ -198,44 +198,41 @@ object SalesPipeline {
     Result(rejects, ordersClean(perOrderRef), dailyCitySales(perOrderRef))
   }
 
-  /** Run with sinks, reference lifecycle (`:59-224`): count-gated rejects
-    * CSV, per-day `daily_summary_YYYYMMDD.csv` plus the concatenated
-    * `daily_summary_all.csv` (`;` / utf-8 / `%.2f`), and the two DB tables
-    * via [[Sinks.writeDbTable]] (Parquet fallback — no SQLite JDBC driver
-    * resolvable offline; SURVEY §7.2.3).
+  /** Run with sinks, reference lifecycle (`:59-224`): the rejects CSV
+    * (only when there are rejects), per-day `daily_summary_YYYYMMDD.csv`
+    * plus the concatenated `daily_summary_all.csv` (`;` / utf-8 / `%.2f`),
+    * and the two DB tables via [[Sinks.writeDbTable]] (Parquet fallback —
+    * no SQLite JDBC driver resolvable offline; SURVEY §7.2.3). Each final
+    * frame behind a CSV is collected once.
     */
   def run(spark: SparkSession, config: Config): Unit = {
     val r = build(spark, config.inputDir)
-    val rejectCount = r.rejects.count()
-    if (rejectCount > 0)
-      // (order_id, created_at, pos) is a total order over the fixtures (the
-      // fk_rejects oracle uses the same); (order_id, pos) alone ties between
-      // an order's original and duplicate records, and Spark's sort is not
-      // stable on ties — the golden-file byte compare would be plan-dependent.
-      Sinks.writeSingleCsv(r.rejects.orderBy("order_id", "created_at", "pos").drop("pos"),
+    // (order_id, created_at, pos) is a total order over the fixtures (the
+    // fk_rejects oracle uses the same); (order_id, pos) alone ties between
+    // an order's original and duplicate records, and Spark's sort is not
+    // stable on ties — the golden-file byte compare would be plan-dependent.
+    val rejects = r.rejects.orderBy("order_id", "created_at", "pos").drop("pos")
+    val rejectRows = rejects.collect().toSeq
+    if (rejectRows.nonEmpty)
+      Sinks.writeSingleCsv(rejects.schema, rejectRows,
         s"${config.outputDir}/rejects_items.csv", config)
     val daily = r.dailyCitySales.cache()
     Sinks.writeDbTable(r.ordersClean, config.dbPath, "orders_clean")
     Sinks.writeDbTable(daily, config.dbPath, "daily_city_sales")
-    Sinks.writePerDayCsv(daily, config.outputDir, config)
+    val dailyRows = daily.collect().toSeq
+    Sinks.writePerDayCsv(daily.schema, dailyRows, config.outputDir, config)
     // Concatenated twin of the per-day fan-out (pandas reference
     // `src/pandas/pipeline_pandas.py:201-202` writes agg once more as
     // daily_summary_all.csv) — same (date, city, channel) order.
-    Sinks.writeSingleCsv(daily, s"${config.outputDir}/daily_summary_all.csv", config)
+    Sinks.writeSingleCsv(daily.schema, dailyRows,
+      s"${config.outputDir}/daily_summary_all.csv", config)
     daily.unpersist()
   }
 
   def main(args: Array[String]): Unit = {
     val settings = if (args.nonEmpty) args(0) else "fixtures/freshkart/settings.yaml"
     val config = Config.load(settings)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("FreshKartSalesPipeline")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start("FreshKartSalesPipeline", 32)
     try run(spark, config)
     finally spark.stop()
   }

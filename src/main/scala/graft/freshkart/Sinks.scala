@@ -4,8 +4,8 @@ import java.io.File
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.Locale
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.{DoubleType, FloatType}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{DoubleType, FloatType, StructType}
 
 /** FreshKart sinks (S6, S7).
   *
@@ -33,8 +33,8 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   */
 object Sinks {
 
-  private def fmtRow(df: DataFrame, floatFormat: String, sep: String): org.apache.spark.sql.Row => String = {
-    val isFloat = df.schema.fields.map(f => f.dataType == DoubleType || f.dataType == FloatType)
+  private def fmtRow(schema: StructType, floatFormat: String, sep: String): Row => String = {
+    val isFloat = schema.fields.map(f => f.dataType == DoubleType || f.dataType == FloatType)
     row =>
       row.toSeq.iterator.zipWithIndex.map {
         case (null, _) => ""
@@ -45,33 +45,40 @@ object Sinks {
   }
 
   /** Write `df` as ONE csv file (header + rows) at `path`. */
-  def writeSingleCsv(df: DataFrame, path: String, config: Config): Unit = {
+  def writeSingleCsv(df: DataFrame, path: String, config: Config): Unit =
+    writeSingleCsv(df.schema, df.collect().toSeq, path, config)
+
+  /** [[writeSingleCsv]] over rows already collected from a frame of `schema`. */
+  def writeSingleCsv(schema: StructType, rows: Seq[Row], path: String,
+      config: Config): Unit = {
     val sep = config.csvSep
     val charset = Charset.forName(config.csvEncoding)
-    val fmt = fmtRow(df, config.csvFloatFormat, sep)
-    val header = df.columns.mkString(sep)
-    val lines = df.collect().map(fmt)
+    val fmt = fmtRow(schema, config.csvFloatFormat, sep)
+    val header = schema.fieldNames.mkString(sep)
+    val lines = rows.map(fmt)
     val p = Paths.get(path)
     Option(p.getParent).foreach(Files.createDirectories(_))
     Files.write(p, (header +: lines).mkString("", "\n", "\n").getBytes(charset))
   }
 
   /** Per-day fan-out: `daily_summary_YYYYMMDD.csv` per distinct `date`
-    * (reference `:201-222`). One collect, then driver-side grouping — the
-    * input is the final daily aggregate (O(days × cities × channels) rows).
+    * (reference `:201-222`), grouped on the driver over rows the caller
+    * collected once — the final daily aggregate (O(days × cities ×
+    * channels) rows).
     */
-  def writePerDayCsv(daily: DataFrame, outDir: String, config: Config): Unit = {
+  def writePerDayCsv(schema: StructType, rows: Seq[Row], outDir: String,
+      config: Config): Unit = {
     val sep = config.csvSep
     val charset = Charset.forName(config.csvEncoding)
-    val fmt = fmtRow(daily, config.csvFloatFormat, sep)
-    val header = daily.columns.mkString(sep)
+    val fmt = fmtRow(schema, config.csvFloatFormat, sep)
+    val header = schema.fieldNames.mkString(sep)
     Files.createDirectories(Paths.get(outDir))
-    val dateIdx = daily.columns.indexOf("date")
-    daily.collect().groupBy(_.getString(dateIdx)).toSeq.sortBy(_._1).foreach {
-      case (date, rows) =>
+    val dateIdx = schema.fieldIndex("date")
+    rows.groupBy(_.getString(dateIdx)).toSeq.sortBy(_._1).foreach {
+      case (date, dayRows) =>
         val name = s"daily_summary_${date.replace("-", "")}.csv"
         Files.write(Paths.get(outDir, name),
-          (header +: rows.toSeq.map(fmt))
+          (header +: dayRows.map(fmt))
             .mkString("", "\n", "\n").getBytes(charset),
           StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
           StandardOpenOption.WRITE)

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-
 /** Builds the committed character-trigram language profiles under
   * `fixtures/langid/profile.parquet` — the "model file" for ta_langid
   * (CLD-style n-gram text categorization; Cavnar & Trenkle 1994 for the
@@ -138,8 +136,9 @@ object LangIdProfileGen {
 
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "fixtures/langid"
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("langid-profile-gen").config("spark.ui.enabled", "false").getOrCreate()
+    // 200 = Spark's default width, which this main always ran with (the
+    // profile write itself has no shuffle)
+    val spark = graft.Sessions.start("langid-profile-gen", 200)
     import spark.implicits._
     buildProfile().toDF("trigram", "w_en", "w_fr", "w_de", "w_es")
       .coalesce(1)

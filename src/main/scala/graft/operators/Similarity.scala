@@ -145,6 +145,29 @@ object Similarity {
       .withColumn("nrm", Exprs.l2norm($"v"))
   }
 
+  /** Exact top-10 per query (queries: vec_id < 5) over a (query_id, cand_id)
+    * candidate frame, by `round(cosine, 6)` desc then cand_id: the one
+    * ranking of sim_lsh_topk, sim_ivf_topk and sim_recall_eval's ivf grade.
+    * `e` is [[embWithNorm]]. Output (query_id, cand_id, cos, rk: long),
+    * unsorted.
+    */
+  private def cosineTop10(s: org.apache.spark.sql.SparkSession,
+      e: org.apache.spark.sql.DataFrame,
+      cands: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    val q = e.select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"))
+      .filter($"query_id" < 5)
+    val wTop = Window.partitionBy($"query_id").orderBy($"cos".desc, $"cand_id".asc)
+    cands
+      .join(broadcast(q), Seq("query_id"))
+      .join(e.as("c"), $"cand_id" === $"c.vec_id")
+      .select($"query_id", $"cand_id",
+        round(Exprs.dot($"qv", $"c.v") / ($"qnrm" * $"c.nrm"), 6).as("cos"))
+      .withColumn("rk", row_number().over(wTop))
+      .filter($"rk" <= 10)
+      .select($"query_id", $"cand_id", $"cos", $"rk".cast("long").as("rk"))
+  }
+
   /** Deterministic per-label coarse centroids (the trained IVF quantizer). */
   private def ivfCentroids(s: org.apache.spark.sql.SparkSession, dir: String) =
     centroidsOf(s, Tables.embeddings(s, dir))
@@ -787,9 +810,7 @@ object Similarity {
          |SELECT query_id, cand_id, cos, rk FROM ranked WHERE rk <= 10
          |ORDER BY query_id, rk""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val e = Tables.embeddings(s, dir)
-        .select($"vec_id", Exprs.vecAsDouble($"embedding").as("v"))
-        .withColumn("nrm", Exprs.l2norm($"v"))
+      val e = embWithNorm(s, dir)
       val buckets = HyperplaneLsh.bucketed(e, $"v", HyperplaneLsh.AnnTables, HyperplaneLsh.AnnPlanes)
         .select($"vec_id", $"lsh_table", $"lsh_bucket")
       val qb = buckets.filter($"vec_id" < 5).select(
@@ -802,17 +823,7 @@ object Similarity {
             && $"query_id" =!= $"c.vec_id")
         .select($"query_id", $"c.vec_id".as("cand_id"))
         .distinct()
-      val q = e.select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"))
-        .filter($"query_id" < 5)
-      val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"cand_id".asc)
-      cands
-        .join(broadcast(q), Seq("query_id"))
-        .join(e.as("c"), $"cand_id" === $"c.vec_id")
-        .select($"query_id", $"cand_id",
-          round(Exprs.dot($"qv", $"c.v") / ($"qnrm" * $"c.nrm"), 6).as("cos"))
-        .withColumn("rk", row_number().over(w))
-        .filter($"rk" <= 10)
-        .select($"query_id", $"cand_id", $"cos", $"rk".cast("long").as("rk"))
+      cosineTop10(s, e, cands)
         .transform(d => graft.QueryDef.smallSort(d, $"query_id", $"rk"))
     },
 
@@ -829,18 +840,7 @@ object Similarity {
     // IvfRecallSpec additionally measures recall vs the exact baseline.
     sqlChecked("sim_ivf_topk", IvfTopkSql) { (s, dir) =>
       import s.implicits._
-      val e = embWithNorm(s, dir)
-      val q = e.select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"))
-        .filter($"query_id" < 5)
-      val wTop = Window.partitionBy($"query_id").orderBy($"cos".desc, $"cand_id".asc)
-      ivfCandidatePairs(s, dir)
-        .join(broadcast(q), Seq("query_id"))
-        .join(e.as("c"), $"cand_id" === $"c.vec_id")
-        .select($"query_id", $"cand_id",
-          round(Exprs.dot($"qv", $"c.v") / ($"qnrm" * $"c.nrm"), 6).as("cos"))
-        .withColumn("rk", row_number().over(wTop))
-        .filter($"rk" <= 10)
-        .select($"query_id", $"cand_id", $"cos", $"rk".cast("long").as("rk"))
+      cosineTop10(s, embWithNorm(s, dir), ivfCandidatePairs(s, dir))
         .orderBy($"query_id", $"rk")
     },
 
@@ -1731,20 +1731,10 @@ object Similarity {
           .select($"query_id", $"node".as("cand_id"))
         gradeTopk(s, bf, method, topk, cands)
       }
-      val e = embWithNorm(s, dir)
-      val qf = e.filter($"vec_id" < 5)
-        .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"))
-      val wTop = Window.partitionBy($"query_id").orderBy($"cos".desc, $"cand_id".asc)
-      // the sim_ivf_topk ranking over the shared candidate set (identical
-      // expressions; that query's trailing ORDER BY is irrelevant to the
-      // equi-join grade and is skipped)
-      val ivfTop = ivfCands
-        .join(broadcast(qf), Seq("query_id"))
-        .join(e.as("c"), $"cand_id" === $"c.vec_id")
-        .select($"query_id", $"cand_id",
-          round(Exprs.dot($"qv", $"c.v") / ($"qnrm" * $"c.nrm"), 6).as("cos"))
-        .withColumn("rk", row_number().over(wTop))
-        .filter($"rk" <= 10)
+      // the sim_ivf_topk ranking over the shared candidate set (that
+      // query's trailing ORDER BY is irrelevant to the equi-join grade and
+      // is skipped)
+      val ivfTop = cosineTop10(s, embWithNorm(s, dir), ivfCands)
         .select($"query_id", $"cand_id")
       // ONE search per graph method pays for both the top-k and the budget
       // count. ALL FOUR methods are graded in this oracle-checked row

@@ -122,6 +122,23 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     Sinks.deleteRecursively(new java.io.File(out))
   }
 
+  test("P4: no rejects_items.csv when no item line has a negative price") {
+    val in = Files.createTempDirectory("fk-no-rejects")
+    Files.writeString(in.resolve("orders_2025-03-01.json"),
+      """[{"order_id": "O1", "customer_id": "C1", "channel": "web",
+        |  "created_at": "2025-03-01 10:00:00", "payment_status": "paid",
+        |  "items": [{"sku": "SKU-1", "qty": 2, "unit_price": 5.0}]}]""".stripMargin)
+    Files.writeString(in.resolve("customers.csv"),
+      "customer_id,first_name,last_name,email,city,is_active\nC1,Ann,Lee,ann@example.com,Paris,true\n")
+    Files.writeString(in.resolve("refunds.csv"), "refund_id,order_id,amount,reason,created_at\n")
+    val out = in.resolve("out").toString
+    SalesPipeline.run(spark, Config(in.toString, out, s"$out/sales.db"))
+    Files.exists(Paths.get(out, "rejects_items.csv")) shouldBe false
+    // the run itself completed: header + the one order's daily row
+    Files.readAllLines(Paths.get(out, "daily_summary_all.csv")).size shouldBe 2
+    Sinks.deleteRecursively(in.toFile)
+  }
+
   test("per-day fan-out writes one file per distinct date, all 31 days") {
     val out = Files.createTempDirectory("fk-days").toString
     val cfg = Config(fixtures, out, s"$out/sales.db")
