@@ -19,8 +19,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *    paths) show only their final frame.
   *  - `sbt "runMain graft.Probe jobs <query>..."` runs each query to the
   *    `noop` sink twice, a warm pass (memos, JIT) and then a measured pass,
-  *    and prints every Spark job's wall time and `spark.job.description`, so
-  *    the time of a labeled iterative path is attributable to its phases.
+  *    and prints every Spark job's wall time, call site and
+  *    `spark.job.description`, so the time of a labeled iterative path is
+  *    attributable to its phases and each job to the line that started it.
   */
 object Probe {
   private val Exchange = "Exchange (hashpartitioning|rangepartitioning|SinglePartition)"
@@ -56,18 +57,20 @@ object Probe {
   }
 
   private def jobs(s: SparkSession, sfDir: String, names: Seq[String]): Unit = {
-    val starts = new ConcurrentHashMap[Int, (Long, String)]()
+    val starts = new ConcurrentHashMap[Int, (Long, String, String)]()
     val lines = new ConcurrentLinkedQueue[String]()
     s.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val desc = Option(j.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse("")
-        starts.put(j.jobId, (j.time, desc))
+        // the result stage is named after the job's call site
+        val site = j.stageInfos.maxBy(_.stageId).name
+        starts.put(j.jobId, (j.time, site, desc))
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        Option(starts.remove(j.jobId)).foreach { case (t0, desc) =>
-          lines.add(f"job ${j.jobId}%4d ${j.time - t0}%8d ms  $desc")
+        Option(starts.remove(j.jobId)).foreach { case (t0, site, desc) =>
+          lines.add(f"job ${j.jobId}%4d ${j.time - t0}%8d ms  $site  $desc")
         }
     })
     for (name <- names; (pass, label) <- Seq(1 -> "warm", 2 -> "measured")) {

@@ -180,10 +180,14 @@ object SalesPipeline {
 
   // --- end-to-end -----------------------------------------------------------
 
+  /** The pipeline's frames, plus the cached customer dimension they read,
+    * which the caller unpersists once its sinks have run.
+    */
   final case class Result(
       rejects: DataFrame,
       ordersClean: DataFrame,
-      dailyCitySales: DataFrame)
+      dailyCitySales: DataFrame,
+      customersClean: DataFrame)
 
   /** Full logical pipeline (no sinks): reads → cleaned → split → dedup →
     * aggregate → joins → final rollup.
@@ -195,7 +199,7 @@ object SalesPipeline {
     val (rejects, positive) = rejectsSplit(flat)
     val perOrder = perOrderAgg(dedupFirst(positive))
     val perOrderRef = refundRollup(activeEnrich(perOrder, customersClean), refundsClean)
-    Result(rejects, ordersClean(perOrderRef), dailyCitySales(perOrderRef))
+    Result(rejects, ordersClean(perOrderRef), dailyCitySales(perOrderRef), customersClean)
   }
 
   /** Run with sinks, reference lifecycle (`:59-224`): the rejects CSV
@@ -207,6 +211,11 @@ object SalesPipeline {
     */
   def run(spark: SparkSession, config: Config): Unit = {
     val r = build(spark, config.inputDir)
+    try sinks(r, config)
+    finally r.customersClean.unpersist()
+  }
+
+  private def sinks(r: Result, config: Config): Unit = {
     // (order_id, created_at, pos) is a total order over the fixtures (the
     // fk_rejects oracle uses the same); (order_id, pos) alone ties between
     // an order's original and duplicate records, and Spark's sort is not

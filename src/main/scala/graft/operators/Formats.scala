@@ -323,15 +323,9 @@ object Formats {
         |FROM v GROUP BY version ORDER BY version""".stripMargin) { (s, dir) =>
       import s.implicits._
       val root = versionedTableDir(s, dir)
-      def readVersion(v: Int): org.apache.spark.sql.DataFrame = {
-        // the reader pins a manifest: the snapshot is the file list, no
-        // directory listing races, no partial-commit visibility
-        import scala.jdk.CollectionConverters._
-        val files = java.nio.file.Files
-          .readAllLines(java.nio.file.Paths.get(s"$root/manifest-v$v.txt"))
-          .asScala.filter(_.nonEmpty).map(l => s"$root/$l").toSeq
-        s.read.parquet(files: _*)
-      }
+      // the reader pins a manifest: the snapshot is the file list, no
+      // directory listing races, no partial-commit visibility
+      def readVersion(v: Int) = readManifestVersion(s, root, v)
       val per = (1 to 3).map { v =>
         readVersion(v)
           // rounded to cents: at this magnitude (~1.2e10) the scaled int128
@@ -383,15 +377,8 @@ object Formats {
         |FROM v3""".stripMargin) { (s, dir) =>
       import s.implicits._
       val root = freshVersionedCopy(s, dir)
-      def readManifest(v: Int): org.apache.spark.sql.DataFrame = {
-        import scala.jdk.CollectionConverters._
-        val files = java.nio.file.Files
-          .readAllLines(java.nio.file.Paths.get(s"$root/manifest-v$v.txt"))
-          .asScala.filter(_.nonEmpty).map(l => s"$root/$l").toSeq
-        s.read.parquet(files: _*)
-      }
       def currentStats(): (Long, Double) = {
-        val r = readManifest(3)
+        val r = readManifestVersion(s, root, 3)
           .agg(count(lit(1)), round(dsum($"o_totalprice"), 2)).collect().head
         (r.getLong(0), r.getDouble(1))
       }
@@ -450,7 +437,8 @@ object Formats {
   }
 
   /** Build the 3-version fixture under `root`: immutable data files
-    * data-a/data-b/data-a2 plus manifest-v{1,2,3}. Shared by
+    * data-a/data-b/data-a2, manifest-v{1,2,3} and the table's
+    * `_schema.json`. Shared by
     * io_time_travel's memoized dir and the mutating queries'
     * [[freshVersionedCopy]] hardlink clones (merge/cdf/vacuum MUTATE
     * their table, so they can never share the memoized one directly).
@@ -459,29 +447,15 @@ object Formats {
       s: org.apache.spark.sql.SparkSession, dir: String, root: String): Unit = {
     import s.implicits._
     val orders = Tables.orders(s, dir)
-    def writeFile(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = s"$root/_stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$root/$name"))
-      def rm(f: java.io.File): Unit = {
-        val k = f.listFiles(); if (k != null) k.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(tmp))
-    }
-    writeFile("data-a.parquet", orders.filter($"o_orderkey" % 3 === 0))
-    writeFile("data-b.parquet", orders.filter($"o_orderkey" % 3 === 1))
-    writeFile("data-a2.parquet",
+    Files.write(java.nio.file.Paths.get(s"$root/$SchemaFile"),
+      orders.schema.json.getBytes("UTF-8"))
+    writeDataFile(s, root, "data-a.parquet", orders.filter($"o_orderkey" % 3 === 0))
+    writeDataFile(s, root, "data-b.parquet", orders.filter($"o_orderkey" % 3 === 1))
+    writeDataFile(s, root, "data-a2.parquet",
       orders.filter($"o_orderkey" % 3 === 0 && $"o_orderkey" % 9 =!= 0))
-    def commit(v: Int, files: Seq[String]): Unit =
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$root/manifest-v$v.txt"),
-        (files.mkString("\n") + "\n").getBytes("UTF-8"))
-    commit(1, Seq("data-a.parquet"))
-    commit(2, Seq("data-a.parquet", "data-b.parquet"))
-    commit(3, Seq("data-a2.parquet", "data-b.parquet"))
+    writeManifest(root, 1, Seq("data-a.parquet"))
+    writeManifest(root, 2, Seq("data-a.parquet", "data-b.parquet"))
+    writeManifest(root, 3, Seq("data-a2.parquet", "data-b.parquet"))
   }
 
   /** VACUUM on the manifest-versioned table: expire manifests older than
@@ -532,15 +506,53 @@ object Formats {
   private def resolveManifestLine(root: String, line: String): String =
     if (line.startsWith("/")) line else s"$root/$line"
 
+  /** The lines of manifest `v` under `root`, as committed. */
+  private def manifestLines(root: String, v: Int): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.readAllLines(java.nio.file.Paths.get(s"$root/manifest-v$v.txt"))
+      .asScala.filter(_.nonEmpty).toSeq
+  }
+
+  private def writeManifest(root: String, v: Int, lines: Seq[String]): Unit =
+    Files.write(java.nio.file.Paths.get(s"$root/manifest-v$v.txt"),
+      (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+
+  /** Table metadata: the Spark schema of the table's data files, written
+    * once into the table root (Delta's `metaData.schemaString`, Iceberg's
+    * table-metadata schema). Snapshot reads pass it to the scan, so
+    * planning a read launches no parquet footer-inference job.
+    */
+  private final val SchemaFile = "_schema.json"
+
+  /** Read the deletion-vector files `names` under `root`: every vector has
+    * the one (file, pos) schema, so no read of one infers it.
+    */
+  private def readDvFiles(s: org.apache.spark.sql.SparkSession, root: String,
+      names: Seq[String]): org.apache.spark.sql.DataFrame =
+    s.read.schema("file STRING, pos BIGINT").parquet(names.map(f => s"$root/$f"): _*)
+
+  /** Scan resolved data-file paths with the schema recorded in the root
+    * they live in: a shallow clone's lines point into its source's root,
+    * so the source's `_schema.json` serves the clone without a copy. A
+    * missing schema file fails the read; it never falls back to inference.
+    */
+  private def readDataFiles(s: org.apache.spark.sql.SparkSession,
+      paths: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val schemas = paths.map(p => java.nio.file.Paths.get(p).getParent.resolve(SchemaFile))
+      .distinct.map { f =>
+        if (!Files.exists(f)) throw new IllegalStateException(
+          s"table schema $f is missing: versioned tables record their schema at build")
+        org.apache.spark.sql.types.DataType.fromJson(Files.readString(f))
+      }.distinct
+    require(schemas.length == 1, s"data files span tables of different schemas: $paths")
+    s.read.schema(schemas.head.asInstanceOf[org.apache.spark.sql.types.StructType])
+      .parquet(paths: _*)
+  }
+
   /** Read a pinned manifest version of the table under `root`. */
   private def readManifestVersion(
-      s: org.apache.spark.sql.SparkSession, root: String, v: Int) = {
-    import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files
-      .readAllLines(java.nio.file.Paths.get(s"$root/manifest-v$v.txt"))
-      .asScala.filter(_.nonEmpty).map(resolveManifestLine(root, _)).toSeq
-    s.read.parquet(files: _*)
-  }
+      s: org.apache.spark.sql.SparkSession, root: String, v: Int) =
+    readDataFiles(s, manifestLines(root, v).map(resolveManifestLine(root, _)))
 
   /** Write `df` as ONE immutable data file `root/name` (staging dir +
     * rename — the commit protocol's data-file half). For FIXTURE slices
@@ -556,10 +568,7 @@ object Formats {
       .find(_.getName.endsWith(".parquet")).get
     java.nio.file.Files.move(part.toPath,
       java.nio.file.Paths.get(s"$root/$name"))
-    def rm(f: java.io.File): Unit = {
-      val k = f.listFiles(); if (k != null) k.foreach(rm); f.delete()
-    }
-    rm(new java.io.File(tmp))
+    rmTree(new java.io.File(tmp))
   }
 
   /** Write `df` as a PARALLEL immutable file GROUP `root/<base>-<i>.parquet`
@@ -581,10 +590,7 @@ object Formats {
       java.nio.file.Files.move(p.toPath, java.nio.file.Paths.get(s"$root/$name"))
       name
     }.toSeq
-    def rm(f: java.io.File): Unit = {
-      val k = f.listFiles(); if (k != null) k.foreach(rm); f.delete()
-    }
-    rm(new java.io.File(tmp))
+    rmTree(new java.io.File(tmp))
     names
   }
 
@@ -627,21 +633,20 @@ object Formats {
       // — an 8× smoke measured it as 9 of merge's 20 seconds; the split
       // is ~35× cheaper and codegen-friendly.
       .withColumn("_file", substring_index(input_file_name(), "/", -1))
-    val matchedKeys = updates.select($"o_orderkey")
-      .union(deletes.select($"o_orderkey"))
-    val rewritten = tgt.join(matchedKeys, Seq("o_orderkey"))
-      .select($"_file").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted // file-list-sized metadata
-    import scala.jdk.CollectionConverters._
-    val v3Files = java.nio.file.Files
-      .readAllLines(java.nio.file.Paths.get(s"$root/manifest-v3.txt"))
-      .asScala.filter(_.nonEmpty).toSeq
-    val reused = v3Files.filterNot(rewritten.contains)
+    // ONE join of the target with the op-tagged match keys answers every
+    // match gate: the files to rewrite and the update and delete counts
+    // (the key sets are disjoint: deletes win the %8 = 1 overlap)
+    val matchedKeys = updates.select($"o_orderkey", lit(true).as("_upd"))
+      .union(deletes.select($"o_orderkey", lit(false).as("_upd")))
+    val gates = tgt.join(matchedKeys, Seq("o_orderkey"))
+      .agg(sort_array(collect_set($"_file")), count(when($"_upd", 1)),
+        count(when(!$"_upd", 1)))
+      .collect().head // file-list-sized metadata
+    val rewritten = gates.getSeq[String](0)
+    val (nUpd, nDel) = (gates.getLong(1), gates.getLong(2))
+    val reused = manifestLines(root, 3).filterNot(rewritten.contains)
 
     val cols = orders.columns.map(col)
-    val nUpd = tgt.join(updates, Seq("o_orderkey")).count()
-    val nDel = tgt.join(deletes, Seq("o_orderkey")).count()
-    val nIns = inserts.count()
     val newNames = rewritten.flatMap { f =>
       val base = f.stripSuffix(".parquet")
       val merged = tgt.filter($"_file" === f)
@@ -652,11 +657,13 @@ object Formats {
         .select(cols: _*)
       writeDataGroup(s, root, s"$base-m", merged) // parallel rewrite group
     }
-    val insNames = writeDataGroup(s, root, "data-ins", inserts)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/manifest-v4.txt"),
-      ((newNames ++ reused ++ insNames).mkString("\n") + "\n")
-        .getBytes("UTF-8"))
+    // the insert count rides on the write that already scans the inserts,
+    // and is read only after that write has returned
+    val insObs = new org.apache.spark.sql.Observation()
+    val insNames = writeDataGroup(s, root, "data-ins",
+      inserts.observe(insObs, count(lit(1)).as("n")))
+    val nIns = insObs.get("n").asInstanceOf[Long]
+    writeManifest(root, 4, newNames ++ reused ++ insNames)
     (nUpd, nDel, nIns, rewritten, reused)
   }
 
@@ -947,33 +954,24 @@ object Formats {
   def applyDvDeletes(s: org.apache.spark.sql.SparkSession,
       root: String): (Seq[String], Seq[String]) = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val dataFiles = java.nio.file.Files
-      .readAllLines(java.nio.file.Paths.get(s"$root/manifest-v3.txt"))
-      .asScala.filter(_.nonEmpty).toSeq
+    val dataFiles = manifestLines(root, 3)
 
     // ONE scan of the base files builds the vector: (file, pos) of every
     // row matching the delete predicate. Positions always address the
     // immutable BASE file, so later vectors stack without rebasing.
-    def addressed = s.read.parquet(dataFiles.map(resolveManifestLine(root, _)): _*)
+    def addressed = readDataFiles(s, dataFiles.map(resolveManifestLine(root, _)))
       .withColumn("file", substring_index(col("_metadata.file_path"), "/", -1))
       .withColumn("pos", col("_metadata.row_index"))
     val dv4 = addressed.filter($"o_orderkey" % 7 === 2).select($"file", $"pos")
     val dv4Names = writeDataGroup(s, root, "dv-v4", dv4)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/manifest-v4.txt"),
-      ((dataFiles ++ dv4Names.map("dv:" + _)).mkString("\n") + "\n")
-        .getBytes("UTF-8"))
+    writeManifest(root, 4, dataFiles ++ dv4Names.map("dv:" + _))
 
     // The second delete sees the MoR view of v4 (so a row already dead in
     // dv4 is not re-deleted — the vectors partition the deleted rows).
     val dv5 = readMorVersion(s, root, 4)
       .filter($"o_orderkey" % 10 === 6).select($"file", $"pos")
     val dv5Names = writeDataGroup(s, root, "dv-v5", dv5)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/manifest-v5.txt"),
-      ((dataFiles ++ (dv4Names ++ dv5Names).map("dv:" + _)).mkString("\n") + "\n")
-        .getBytes("UTF-8"))
+    writeManifest(root, 5, dataFiles ++ (dv4Names ++ dv5Names).map("dv:" + _))
     (dv4Names, dv5Names)
   }
 
@@ -988,20 +986,13 @@ object Formats {
     */
   def readMorVersion(s: org.apache.spark.sql.SparkSession,
       root: String, v: Int): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val lines = java.nio.file.Files
-      .readAllLines(java.nio.file.Paths.get(s"$root/manifest-v$v.txt"))
-      .asScala.filter(_.nonEmpty).toSeq
-    val (dvLines, dataLines) = lines.partition(_.startsWith("dv:"))
-    val base = s.read.parquet(
-      dataLines.map(resolveManifestLine(root, _)): _*)
+    val (dvLines, dataLines) = manifestLines(root, v).partition(_.startsWith("dv:"))
+    val base = readDataFiles(s, dataLines.map(resolveManifestLine(root, _)))
       .withColumn("file", substring_index(col("_metadata.file_path"), "/", -1))
       .withColumn("pos", col("_metadata.row_index"))
     if (dvLines.isEmpty) base
     else {
-      val dv = s.read.parquet(
-        dvLines.map(f => s"$root/${f.stripPrefix("dv:")}"): _*)
+      val dv = readDvFiles(s, root, dvLines.map(_.stripPrefix("dv:")))
       base.join(broadcast(dv), Seq("file", "pos"), "left_anti")
     }
   }
@@ -1033,17 +1024,20 @@ object Formats {
         |  TRUE AS data_files_unchanged, TRUE AS mor_equals_predicate,
         |  TRUE AS v3_still_full""".stripMargin) { (s, dir) =>
       import s.implicits._
-      import scala.jdk.CollectionConverters._
       val root = freshVersionedCopy(s, dir)
-      def v3Agg() = {
-        val r = readManifestVersion(s, root, 3)
-          .agg(count(lit(1)), round(dsum($"o_totalprice"), 2)).collect().head
-        (r.getLong(0), r.getDouble(1))
+      // count and exact sum over v3 where `p` holds (all rows when `p` is
+      // true): dsum skips nulls like a filtered sum does, so one
+      // conditional aggregate answers several filtered ones exactly
+      def v3Agg(ps: org.apache.spark.sql.Column*) = {
+        val aggs = ps.flatMap(p =>
+          Seq(count(when(p, 1)), round(dsum(when(p, $"o_totalprice")), 2)))
+        val r = readManifestVersion(s, root, 3).agg(aggs.head, aggs.tail: _*)
+          .collect().head
+        ps.indices.map(i => (r.getLong(2 * i), r.getDouble(2 * i + 1)))
       }
-      val before = v3Agg()
+      val before = v3Agg(lit(true)).head
       val (dv4Names, dv5Names) = applyDvDeletes(s, root)
-      def dvCount(names: Seq[String]): Long =
-        s.read.parquet(names.map(f => s"$root/$f"): _*).count()
+      def dvCount(names: Seq[String]): Long = readDvFiles(s, root, names).count()
       def morAgg(v: Int) = {
         val r = readMorVersion(s, root, v)
           .agg(count(lit(1)), round(dsum($"o_totalprice"), 2)).collect().head
@@ -1051,21 +1045,15 @@ object Formats {
       }
       val (v4n, v4sum) = morAgg(4)
       val (v5n, v5sum) = morAgg(5)
-      // independent predicate replay over the base snapshot
-      def predAgg(p: org.apache.spark.sql.Column) = {
-        val r = readManifestVersion(s, root, 3).filter(p)
-          .agg(count(lit(1)), round(dsum($"o_totalprice"), 2)).collect().head
-        (r.getLong(0), r.getDouble(1))
-      }
-      val p4 = predAgg($"o_orderkey" % 7 =!= 2)
-      val p5 = predAgg($"o_orderkey" % 7 =!= 2 && $"o_orderkey" % 10 =!= 6)
-      def manifestData(v: Int): Seq[String] = java.nio.file.Files
-        .readAllLines(java.nio.file.Paths.get(s"$root/manifest-v$v.txt"))
-        .asScala.filter(_.nonEmpty).filterNot(_.startsWith("dv:")).toSeq
+      // one pass over the base snapshot: v3 still reads full, and the
+      // independent predicate replay of both delete commits
+      val Seq(after, p4, p5) = v3Agg(lit(true), $"o_orderkey" % 7 =!= 2,
+        $"o_orderkey" % 7 =!= 2 && $"o_orderkey" % 10 =!= 6)
+      def manifestData(v: Int) = manifestLines(root, v).filterNot(_.startsWith("dv:"))
       Seq((v4n, v4sum, dvCount(dv4Names), v5n, v5sum, dvCount(dv5Names),
         manifestData(4) == manifestData(3) && manifestData(5) == manifestData(3),
         (v4n, v4sum) == p4 && (v5n, v5sum) == p5,
-        v3Agg() == before))
+        after == before))
         .toDF("n_rows_v4", "sum_price_v4", "n_deleted_v4",
           "n_rows_v5", "sum_price_v5", "n_deleted_v5",
           "data_files_unchanged", "mor_equals_predicate", "v3_still_full")
@@ -1096,7 +1084,6 @@ object Formats {
         |  (SELECT round(CAST(SUM(CAST(o_totalprice AS DECIMAL(20,8))) AS DOUBLE), 2) FROM v3) AS sum_price_source,
         |  TRUE AS clone_zero_copy, TRUE AS source_unaffected""".stripMargin) { (s, dir) =>
       import s.implicits._
-      import scala.jdk.CollectionConverters._
       val srcRoot = freshVersionedCopy(s, dir)
       def srcAgg() = {
         val r = readManifestVersion(s, srcRoot, 3)
@@ -1106,13 +1093,7 @@ object Formats {
       val before = srcAgg()
       // the clone: one manifest write, data lines are absolute refs
       val cloneRoot = scratchDir("graft-clone")
-      val srcData = java.nio.file.Files
-        .readAllLines(java.nio.file.Paths.get(s"$srcRoot/manifest-v3.txt"))
-        .asScala.filter(_.nonEmpty).toSeq
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$cloneRoot/manifest-v3.txt"),
-        (srcData.map(f => s"$srcRoot/$f").mkString("\n") + "\n")
-          .getBytes("UTF-8"))
+      writeManifest(cloneRoot, 3, manifestLines(srcRoot, 3).map(f => s"$srcRoot/$f"))
       // diverge the clone (two stacked DV deletes), source untouched
       applyDvDeletes(s, cloneRoot)
       val clAgg = readMorVersion(s, cloneRoot, 5)
@@ -1284,11 +1265,8 @@ object Formats {
         |  TRUE AS lost_update_prevented, TRUE AS b_retry_committed,
         |  TRUE AS serializable""".stripMargin) { (s, dir) =>
       import s.implicits._
-      import scala.jdk.CollectionConverters._
       val root = freshVersionedCopy(s, dir)
-      val dataFiles = java.nio.file.Files
-        .readAllLines(java.nio.file.Paths.get(s"$root/manifest-v3.txt"))
-        .asScala.filter(_.nonEmpty).toSeq
+      val dataFiles = manifestLines(root, 3)
       // both writers read SNAPSHOT v3 and stage immutable delete vectors
       val dvA = readMorVersion(s, root, 3)
         .filter($"o_orderkey" % 7 === 2).select($"file", $"pos")
@@ -1301,20 +1279,15 @@ object Formats {
       val bFirst = tryCommitManifest(root, 4, dataFiles ++ bNames.map("dv:" + _))
       // the lost update B's stale manifest would have caused: rows A
       // deleted that B's vector does not cover would come back to life
-      def dv(names: Seq[String]) =
-        s.read.parquet(names.map(f => s"$root/$f"): _*)
-      val resurrected = dv(aNames)
-        .join(dv(bNames), Seq("file", "pos"), "left_anti").count()
+      val resurrected = readDvFiles(s, root, aNames)
+        .join(readDvFiles(s, root, bNames), Seq("file", "pos"), "left_anti").count()
       // conflict resolution: REBASE against the current snapshot — the
       // delete is recomputed on v4's MoR view (rows already dead under A
       // are excluded, so the stacked vectors stay disjoint) — commit v5
       val dvB2 = readMorVersion(s, root, 4)
         .filter($"o_orderkey" % 10 === 6).select($"file", $"pos")
       val b2Names = writeDataGroup(s, root, "dv-b2", dvB2)
-      val v4Lines = java.nio.file.Files
-        .readAllLines(java.nio.file.Paths.get(s"$root/manifest-v4.txt"))
-        .asScala.filter(_.nonEmpty).toSeq
-      val bRetry = tryCommitManifest(root, 5, v4Lines ++ b2Names.map("dv:" + _))
+      val bRetry = tryCommitManifest(root, 5, manifestLines(root, 4) ++ b2Names.map("dv:" + _))
       val fin = readMorVersion(s, root, 5)
         .agg(count(lit(1)), round(dsum($"o_totalprice"), 2)).collect().head
       // serializability: the concurrent outcome equals the sequential one
@@ -1530,13 +1503,12 @@ object Formats {
     */
   private lazy val scratchRoot: java.nio.file.Path = {
     val root = Files.createTempDirectory("graft-formats-scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.io.File): Unit = {
-        val kids = p.listFiles(); if (kids != null) kids.foreach(rm); p.delete()
-      }
-      rm(root.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(root.toFile)))
     root
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    val kids = f.listFiles(); if (kids != null) kids.foreach(rmTree); f.delete()
   }
 
   private def scratchDir(prefix: String): String =

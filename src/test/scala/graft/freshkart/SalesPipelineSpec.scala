@@ -139,6 +139,14 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     Sinks.deleteRecursively(in.toFile)
   }
 
+  test("run releases every plan it caches (the customer dim included)") {
+    spark.catalog.clearCache()
+    val out = Files.createTempDirectory("fk-cache").toString
+    SalesPipeline.run(spark, Config(fixtures, out, s"$out/sales.db"))
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+    Sinks.deleteRecursively(new java.io.File(out))
+  }
+
   test("per-day fan-out writes one file per distinct date, all 31 days") {
     val out = Files.createTempDirectory("fk-days").toString
     val cfg = Config(fixtures, out, s"$out/sales.db")

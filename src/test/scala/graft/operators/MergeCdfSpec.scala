@@ -22,10 +22,17 @@ class MergeCdfSpec extends SparkSuite with Matchers {
     rewritten shouldBe Seq("data-a2.parquet")
     reused shouldBe Seq("data-b.parquet")
     java.nio.file.Files.readAllBytes(b) shouldBe bytesBefore // never copied
-    (nUpd + nDel + nIns) should be > 0L
+    // the fused match gates equal the op predicates counted on the raw table
+    val orders = graft.Tables.orders(spark, dir)
+    val a2 = orders.filter($"o_orderkey" % 3 === 0 && $"o_orderkey" % 9 =!= 0)
+    val want = Seq(
+      a2.filter($"o_orderkey" % 5 === 0 && $"o_orderkey" % 8 =!= 1).count(),
+      a2.filter($"o_orderkey" % 8 === 1).count(),
+      orders.filter($"o_orderkey" % 3 === 2 && $"o_orderkey" % 7 === 0).count())
+    want.foreach(_ should be > 0L)
+    Seq(nUpd, nDel, nIns) shouldBe want
 
     // per-key semantics against the raw table
-    val orders = graft.Tables.orders(spark, dir)
     val v4 = spark.read.parquet(
       scala.jdk.CollectionConverters.ListHasAsScala(
         java.nio.file.Files.readAllLines(
