@@ -35,4 +35,20 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Runs `body` with each `key -> value` set on `s`'s session conf, then
+    * puts every key back as it was: its old value, or unset if it had none.
+    * The restore runs also when the body throws. Scoped to `s`: an
+    * override on a `newSession()` never reaches the session it came from.
+    */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

@@ -738,7 +738,7 @@ object Dedup {
     * Shiloach–Vishkin shortcutting step. (b) alone converges in
     * O(component diameter) rounds; (c) halves the remaining pointer depth
     * each round, so the fixpoint arrives in O(log diameter) — the fix for
-    * the r06 ScaleSmoke finding that components cost 3.0× at 8× rows purely
+    * the r06 scale-up finding (SCALING.md) that components cost 3.0× at 8× rows purely
     * because duplicate families got DEEPER (VERDICT r06 #4; the same rounds
     * bound the large-star/small-star formulation achieves, with one
     * labels⋈labels hash join instead of re-materializing the edge set each

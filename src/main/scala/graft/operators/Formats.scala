@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sessions, Tables}
 import graft.functions.Exprs
 import graft.QueryDef.sqlChecked
 
@@ -1464,15 +1464,10 @@ object Formats {
       // file count silently misses the pinned 4 (ADVICE r09). Scope the
       // split knobs so the scan always yields ≥4 partitions (4 MiB open
       // cost × ≤4 files per 16 MiB bin → ≥16 splits), on any core count.
-      val splitKnobs = Seq(
-        "spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString,
-        "spark.sql.files.openCostInBytes" -> (4L * 1024 * 1024).toString)
-      val prevKnobs = splitKnobs.map { case (k, _) => k -> s.conf.getOption(k) }
-      splitKnobs.foreach { case (k, v) => s.conf.set(k, v) }
-      try small.coalesce(4).write.mode("overwrite").parquet(outDir)
-      finally prevKnobs.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+      Sessions.withConf(s,
+          "spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString,
+          "spark.sql.files.openCostInBytes" -> (4L * 1024 * 1024).toString) {
+        small.coalesce(4).write.mode("overwrite").parquet(outDir)
       }
       val compacted = s.read.parquet(outDir)
       def parquetFiles(d: String): Long =

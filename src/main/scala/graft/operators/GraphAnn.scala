@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sessions, Tables}
 import graft.QueryDef.sqlChecked
 import graft.functions.Exprs
 
@@ -632,15 +632,8 @@ object GraphAnn {
     * broadcast hints here, so AQE has no decision left to improve in walk
     * scope.
     */
-  private def withoutAqe[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val old = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try body finally old match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  private def withoutAqe[T](s: SparkSession)(body: => T): T =
+    Sessions.withConf(s, "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** Collect a BOUNDED frame into a LocalRelation (r18). For the walk's
     * frontier frames — O(batch × shards × keep × degree) rows of five

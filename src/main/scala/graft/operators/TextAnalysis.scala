@@ -38,6 +38,11 @@ object TextAnalysis {
     */
   val BigramMinCount = 2
 
+  /** ta_seq_pack's hash-shard count: each shard packs its docs in doc_id
+    * order, so the count decides the pack layout (Spark and oracle share it).
+    */
+  val PackShards = 8
+
   /** DuckDB fragment for the normWords tokenization (same text as every
     * inline occurrence above; shared by the newer oracles).
     */
@@ -903,16 +908,15 @@ object TextAnalysis {
     // per-shard cumulative token offsets — so packing is reproducible under
     // any partitioning. Scale: shards are independent (one window per
     // shard, no global order), the 100 TB layout is one writer per shard.
-    // The shard COUNT is the scaling knob and is semantics-bearing (it
-    // decides the pack layout): session conf `graft.pack.shards`, default 8
-    // — the value the oracle is built against — and any real run sizes it
-    // to the corpus (shards ∝ rows keeps the per-shard window, and thus
-    // this ratio in ScaleSmoke, constant; holding it at 8 while rows grow
-    // 8× is what the r06/r07 2.5-3× smoke ratio measured).
+    // The shard COUNT is semantics-bearing (it decides the pack layout):
+    // `PackShards`, which the oracle interpolates too. A real run sizes
+    // it to the corpus: shards ∝ rows keeps the per-shard window constant
+    // (held at 8 while rows grew 8×, the r06/r07 scale-up runs measured a
+    // 2.5-3× time ratio).
     sqlChecked(
       "ta_seq_pack",
-      """WITH toks AS (
-        |  SELECT doc_id, doc_id % 8 AS shard,
+      raw"""WITH toks AS (
+        |  SELECT doc_id, doc_id % $PackShards AS shard,
         |    CAST(len(list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g')), '\s+'),
         |         w -> w <> '')) AS BIGINT) AS n_tokens
         |  FROM documents),
@@ -1537,11 +1541,10 @@ object TextAnalysis {
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val shards = s.conf.getOption("graft.pack.shards").map(_.toInt).getOrElse(8)
     val w = Window.partitionBy($"shard").orderBy($"doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs
-      .select($"doc_id", ($"doc_id" % shards).as("shard"),
+      .select($"doc_id", ($"doc_id" % PackShards).as("shard"),
         size(Exprs.normWords($"text")).cast("long").as("n_tokens"))
       .withColumn("cum", sum($"n_tokens").over(w))
       .select($"doc_id", $"shard", $"n_tokens",

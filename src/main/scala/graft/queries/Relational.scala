@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sessions, Tables}
 import graft.QueryDef.sqlChecked
 import graft.functions.Exprs
 
@@ -1303,13 +1303,11 @@ object Relational {
       // every later recursive CTE, and alternating-sf runs in one session
       // would inherit the smaller sf's valve). The conf is read at
       // EXECUTION time, so the walk is forced eagerly (localCheckpoint)
-      // while the valve is set, and the prior value restored in a finally;
+      // while the valve is set, and withConf restores the prior value after;
       // downstream reads the checkpoint, nothing recomputes under the
       // restored conf.
-      val valveKey = "spark.sql.cteRecursionRowLimit"
-      val prevValve = s.conf.getOption(valveKey)
-      s.conf.set(valveKey, (nParts * (maxKey.toString.length + 2)).toString)
-      val walk = try {
+      val valve = (nParts * (maxKey.toString.length + 2)).toString
+      val walk = Sessions.withConf(s, "spark.sql.cteRecursionRowLimit" -> valve) {
         Tables.part(s, dir).createOrReplaceTempView("graft_part_bom")
         s.sql(
           """WITH RECURSIVE walk(part, anc, depth) AS (
@@ -1318,9 +1316,6 @@ object Relational {
             |  SELECT part, anc DIV 10, depth + 1 FROM walk WHERE anc >= 1)
             |SELECT part, anc, depth FROM walk""".stripMargin)
           .localCheckpoint(eager = true)
-      } finally prevValve match {
-        case Some(v) => s.conf.set(valveKey, v)
-        case None => s.conf.unset(valveKey)
       }
       walk
         .join(Tables.part(s, dir).select($"p_partkey", $"p_retailprice"),

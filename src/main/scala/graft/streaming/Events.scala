@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sessions, Tables}
 import graft.QueryDef.sqlChecked
 
 /** Structured-Streaming surface over the `events` table. The reference has no
@@ -31,6 +31,11 @@ object Events {
   private def dsum(c: org.apache.spark.sql.Column) =
     graft.functions.ExactSum.sumScaled(c, 8) // int128 exact sum — same value as sum(cast(c as decimal(20,8))) on <=15-sig-digit inputs, no per-row BigDecimal (see graft.functions.Int128)
 
+  private val StreamPartitions = "spark.sql.shuffle.partitions" -> "8"
+  /** The transformWithState passes keep their state in RocksDB. */
+  private val RocksStateStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Run a streaming query with a smaller state partition count, restoring
     * the session's shuffle partitions after.
     *
@@ -46,12 +51,8 @@ object Events {
     * throughput unit, and defaulting them to the batch shuffle width is a
     * classic streaming misconfiguration.
     */
-  private[streaming] def withStreamPartitions[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, "8")
-    try body finally s.conf.set(key, old)
-  }
+  private[streaming] def withStreamPartitions[T](s: org.apache.spark.sql.SparkSession)(body: => T): T =
+    Sessions.withConf(s, StreamPartitions)(body)
 
   /** All stream sink/checkpoint scratch dirs live under ONE per-JVM root
     * that a shutdown hook deletes recursively. `Files.createTempDirectory`
@@ -919,11 +920,7 @@ object Events {
       outDir: String, ckDir: String): Unit = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import s.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    val prev = s.conf.getOption(providerKey)
-    s.conf.set(providerKey, rocks)
-    try withStreamPartitions(s) {
+    Sessions.withConf(s, StreamPartitions, RocksStateStore) {
       src.filter($"event_type" === "purchase")
         .select($"user_id", $"ts", $"event_id")
         .withWatermark("ts", "0 seconds")
@@ -940,9 +937,6 @@ object Events {
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-    } finally prev match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
     }
   }
 
@@ -956,11 +950,7 @@ object Events {
       outDir: String, ckDir: String): Unit = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import s.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    val prev = s.conf.getOption(providerKey)
-    s.conf.set(providerKey, rocks)
-    try withStreamPartitions(s) {
+    Sessions.withConf(s, StreamPartitions, RocksStateStore) {
       src.filter($"event_type" === "purchase")
         .select($"user_id", $"ts", $"event_id").as[MsEvent]
         .groupByKey(_.user_id)
@@ -974,9 +964,6 @@ object Events {
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-    } finally prev match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
     }
   }
 
