@@ -124,21 +124,88 @@ object Dedup {
     */
   val SubstrWindow = 20
 
-  /** DuckDB twin of `Exprs.normText + Exprs.words` as a CTE over documents. */
-  private val ToksCte =
-    """toks AS (
+  /** DuckDB twin of `Exprs.normText + Exprs.words` as a CTE over the
+    * documents rows that pass `where` (empty: all of them).
+    */
+  private def toksCte(where: String): String =
+    s"""toks AS (
       |  SELECT doc_id,
-      |    list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g')), '\s+'),
+      |    list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g')), '\\s+'),
       |                w -> w <> '') AS w
-      |  FROM documents)""".stripMargin
+      |  FROM documents$where)""".stripMargin
+  private val ToksCte = toksCte("")
 
   /** DuckDB twin of `Exprs.hash60(expr)`. */
   private def sqlHash60(expr: String): String =
     s"CAST(('0x' || substr(md5($expr),1,15)) AS BIGINT)"
 
+  /** `toks` plus `name(doc_id, h)`: every document's distinct word 3-grams,
+    * hashed — the DuckDB twin of [[hashedShingles]] over [[docShinglesOf]].
+    */
+  private def hashedShinglesCtes(name: String, where: String = ""): String =
+    s"""${toksCte(where)},
+       |$name AS (
+       |  SELECT doc_id, ${sqlHash60("shingle")} AS h FROM (
+       |    SELECT DISTINCT doc_id, shingle FROM (
+       |      SELECT doc_id,
+       |        unnest(list_transform(generate_series(1, len(w)-2),
+       |                              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
+       |      FROM toks WHERE len(w) >= 3)))""".stripMargin
+
+  /** `${p}df` and `${p}ordered(doc_id, h, pos, n)` over a (doc_id, h) CTE
+    * `${p}sh`: each document's hashes ranked rarest first — the DuckDB twin
+    * of [[dfOrdered]].
+    */
+  private def dfOrderedCtes(p: String): String =
+    s"""${p}df AS (SELECT h, count(*) AS df FROM ${p}sh GROUP BY h),
+       |${p}ordered AS (
+       |  SELECT doc_id, h,
+       |    row_number() OVER (PARTITION BY doc_id ORDER BY df, h) AS pos,
+       |    count(*) OVER (PARTITION BY doc_id) AS n
+       |  FROM ${p}sh JOIN ${p}df USING (h))""".stripMargin
+
+  /** `name(doc_a, doc_b, carry…, common)` from candidate pairs `cands`
+    * over a (doc_id, h) CTE `sh` — the DuckDB twin of [[commonCounts]].
+    */
+  private def commonCte(name: String, cands: String, sh: String, carry: String*): String = {
+    val keys = ("doc_a" +: "doc_b" +: carry).mkString(", ")
+    s"""$name AS (
+       |  SELECT $keys, count(*) AS common
+       |  FROM $cands JOIN $sh x ON x.doc_id = doc_a
+       |    JOIN $sh y ON y.doc_id = doc_b AND y.h = x.h
+       |  GROUP BY $keys)""".stripMargin
+  }
+
+  /** `${p}counts` and `${p}pairs(doc_a, doc_b, common, jaccard)`, the rows of
+    * a common-count CTE whose Jaccard reaches `t` — the DuckDB twin of
+    * [[withJaccard]] and its threshold filter.
+    */
+  private def jaccardCtes(p: String, common: String, sh: String, t: Double): String =
+    s"""${p}counts AS (SELECT doc_id, count(*) AS n FROM $sh GROUP BY doc_id),
+       |${p}pairs AS (
+       |  SELECT doc_a, doc_b, common,
+       |    round(common / CAST(ca.n + cb.n - common AS DOUBLE), 6) AS jaccard
+       |  FROM $common JOIN ${p}counts ca ON doc_a = ca.doc_id
+       |    JOIN ${p}counts cb ON doc_b = cb.doc_id
+       |  WHERE round(common / CAST(ca.n + cb.n - common AS DOUBLE), 6) >= $t)""".stripMargin
+
+  /** PPJoin at threshold 1/2 (see dd_ppjoin) over a (doc_id, h) CTE
+    * `${p}sh`, ending in `${p}pairs(doc_a, doc_b, common, jaccard)` — the
+    * oracle of dd_ppjoin and the truth side of dd_lsh_eval's.
+    */
+  private def ppJoinCtes(p: String): String =
+    s"""${dfOrderedCtes(p)},
+       |${p}pref AS (SELECT doc_id, h, n FROM ${p}ordered WHERE pos <= n - (n + 1) // 2 + 1),
+       |${p}cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM ${p}pref a JOIN ${p}pref b ON a.h = b.h AND a.doc_id < b.doc_id
+       |  WHERE 2 * b.n >= a.n AND 2 * a.n >= b.n),
+       |${commonCte(s"${p}com", s"${p}cand", s"${p}sh")},
+       |${jaccardCtes(p, s"${p}com", s"${p}sh", 0.5)}""".stripMargin
+
   /** The minhash pair pipeline as a reusable WITH-clause body ending in a
-    * CTE `mh_pairs(doc_a, doc_b, jaccard)` — shared by the pair oracle and
-    * the connected-components oracle.
+    * CTE `mh_pairs(doc_a, doc_b, common, jaccard)` — shared by the pair
+    * oracle and the connected-components oracle.
     */
   private def minhashPairsCtes(k: Int, bands: Int, threshold: Double): String = {
     val rows = k / bands
@@ -172,18 +239,8 @@ object Dedup {
        |  FROM bands x JOIN bands y
        |    ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id),
        |shh AS (SELECT doc_id, ${sqlHash60("shingle")} AS h FROM sh),
-       |counts AS (SELECT doc_id, count(*) AS n FROM shh GROUP BY doc_id),
-       |common AS (
-       |  SELECT doc_a, doc_b, count(*) AS common
-       |  FROM cands JOIN shh sa ON doc_a = sa.doc_id
-       |             JOIN shh sb ON doc_b = sb.doc_id AND sa.h = sb.h
-       |  GROUP BY doc_a, doc_b),
-       |mh_pairs AS (
-       |  SELECT doc_a, doc_b,
-       |    round(common / CAST(ca.n + cb.n - common AS DOUBLE), 6) AS jaccard
-       |  FROM common JOIN counts ca ON doc_a = ca.doc_id
-       |              JOIN counts cb ON doc_b = cb.doc_id
-       |  WHERE round(common / CAST(ca.n + cb.n - common AS DOUBLE), 6) >= $threshold)""".stripMargin
+       |${commonCte("mh_common", "cands", "shh")},
+       |${jaccardCtes("mh_", "mh_common", "shh", threshold)}""".stripMargin
   }
 
   /** DuckDB oracle for [[minhashLshPairs]] — re-derives the K double-hashed
@@ -266,9 +323,6 @@ object Dedup {
   /** Distinct (doc_id, shingle) pairs. array_distinct runs per-row BEFORE the
     * explode, so the distinct needs no shuffle.
     */
-  private[operators] def docShingles(s: SparkSession, dir: String, n: Int = 3): DataFrame =
-    docShinglesOf(s, Tables.documents(s, dir), n)
-
   private[operators] def docShinglesOf(s: SparkSession, docs: DataFrame, n: Int): DataFrame = {
     import s.implicits._
     docs
@@ -316,12 +370,6 @@ object Dedup {
       p
     })
 
-  /** New-vs-old pairs for ONE arrival batch against the persisted index —
-    * shared by the batch and streaming faces of dd_minhash_incr. Every
-    * pair couples one arrival with the fixed index, so the output over any
-    * partitioning of arrivals into batches is the union of the per-batch
-    * outputs (batch-split-invariant; IncrDedupSpec pins it).
-    */
   /** One AvailableNow pass of the arrival-dedup stream: parquet files
     * under `srcDir` (schema from the canonical documents table of
     * `tableDir`), each micro-batch deduped against the persisted signature
@@ -355,16 +403,19 @@ object Dedup {
       .awaitTermination()
   }
 
+  /** New-vs-old pairs for ONE arrival batch against the persisted index —
+    * shared by the batch and streaming faces of dd_minhash_incr. Every
+    * pair couples one arrival with the fixed index, so the output over any
+    * partitioning of arrivals into batches is the union of the per-batch
+    * outputs (batch-split-invariant; IncrDedupSpec pins it).
+    */
   def incrementalMinhashPairs(
       s: SparkSession, arrivals: DataFrame, dir: String): DataFrame = {
     import s.implicits._
     val idxBuckets = s.read.parquet(s"${minhashIndexDir(s, dir)}/buckets")
     val shNew = docShinglesOf(s, arrivals, 3).cache()
     val newBuckets = minhashBandBuckets(minhashSignatures(shNew, 32), 32, 8)
-    val cands = newBuckets.as("x")
-      .join(idxBuckets.as("y"), $"x.band" === $"y.band" && $"x.sig" === $"y.sig")
-      .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
-      .distinct()
+    val cands = bandPairs(newBuckets, idxBuckets)
     // verify re-reads ONLY candidate old docs (candidate-sized, not
     // corpus-sized), then the standard exact-Jaccard on hashed shingles.
     // candidate-sized cache: jaccardFor reads the shingle table three
@@ -374,7 +425,7 @@ object Dedup {
     val shOld = docShinglesOf(s,
       Tables.documents(s, dir).join(candOld, Seq("doc_id"), "left_semi"), 3)
       .cache()
-    jaccardFor(cands, shNew.union(shOld))
+    jaccardFor(cands, hashedShingles(shNew.union(shOld)))
       .filter($"jaccard" >= 0.5)
       .select($"doc_a".as("new_doc"), $"doc_b".as("old_doc"), $"jaccard")
   }
@@ -412,39 +463,50 @@ object Dedup {
       .agg(min(col("h0")).as("m0"), (1 until k).map(i => min(col(s"h$i")).as(s"m$i")): _*)
   }
 
-  /** Exact Jaccard for candidate pairs (doc_a, doc_b) given doc shingles.
-    * The overlap join keys on hash60(shingle) longs, not the shingle
-    * strings (hashed AFTER the per-doc distinct, mirrored in the oracle's
-    * `shh` CTE — same engine-identical collision semantics as
-    * dd_ngram_jaccard's keying).
+  /** (doc_id, h = hash60(shingle)) from a (doc_id, shingle) frame. Hashing
+    * runs AFTER [[docShinglesOf]]'s per-doc distinct, in both engines, so a
+    * hash collision behaves identically cross-engine (the oracles' `sh`
+    * CTEs, [[hashedShinglesCtes]]).
     */
-  private[operators] def jaccardFor(cands: DataFrame, sh: DataFrame): DataFrame =
-    jaccardForHashed(cands,
-      sh.select(col("doc_id"), Exprs.hash60(col("shingle")).as("h")))
+  private[operators] def hashedShingles(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), Exprs.hash60(col("shingle")).as("h"))
 
-  /** [[jaccardFor]] over an ALREADY-HASHED (doc_id, h) shingle frame —
-    * callers holding a cached hashed table (dd_lsh_eval shares one between
-    * the verify and the exact-truth side, r18) skip re-hashing per use.
+  /** THE exact verify: for each candidate pair (doc_a, doc_b, carry…), the
+    * number of (doc_a row, doc_b row) pairs of the (doc_id, h) table that
+    * agree on `h` — a multiset count, so a hash a document holds twice
+    * counts twice. Pairs that share no hash (or whose doc has no rows)
+    * yield no row. Both sides explode the candidates against `shh` and
+    * join on `h`; this is the one place that join lives.
     */
-  private[operators] def jaccardForHashed(cands: DataFrame, shh: DataFrame): DataFrame = {
-    val counts = shh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val common = cands
+  private[operators] def commonCounts(
+      pairs: DataFrame, shh: DataFrame, carry: String*): DataFrame =
+    pairs
       .join(shh.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(shh.as("sb"), col("doc_b") === col("sb.doc_id")
         && col("sa.h") === col("sb.h"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("common"))
+      .groupBy((Seq("doc_a", "doc_b") ++ carry).map(col): _*)
+      .agg(count(lit(1)).as("common"))
+
+  /** (doc_a, doc_b, common, jaccard) from [[commonCounts]]-shaped rows:
+    * jaccard = common / (n_a + n_b − common) over per-doc row counts of
+    * `shh`, rounded to 6 places like every oracle's.
+    */
+  private[operators] def withJaccard(common: DataFrame, shh: DataFrame): DataFrame = {
+    val counts = shh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     common
       .join(counts.as("ca"), col("doc_a") === col("ca.doc_id"))
       .join(counts.as("cb"), col("doc_b") === col("cb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
+      .select(col("doc_a"), col("doc_b"), col("common"),
         round(col("common").cast("double")
           / (col("ca.n") + col("cb.n") - col("common")), 6).as("jaccard"))
   }
 
-  /** MinHash+LSH near-dup pairs over any (doc_id, text) DataFrame:
-    * K-minhash signature per doc, banded bucket join for candidates, exact
-    * Jaccard verify on candidates only. `threshold` is on verified Jaccard.
+  /** Exact Jaccard (doc_a, doc_b, jaccard) for candidate pairs over a
+    * [[hashedShingles]] table — the overlap keys on longs, never strings.
     */
+  private[operators] def jaccardFor(cands: DataFrame, shh: DataFrame): DataFrame =
+    withJaccard(commonCounts(cands, shh), shh).drop("common")
+
   /** Banded bucket rows (doc_id, band, sig) from a K-column signature. */
   private[operators] def minhashBandBuckets(
       sig: DataFrame, k: Int, bands: Int): DataFrame = {
@@ -458,58 +520,58 @@ object Dedup {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.sig").as("sig"))
   }
 
+  /** Distinct candidate pairs (doc_a from `x`, doc_b from `y`) of two
+    * [[minhashBandBuckets]] frames: rows that agree on band and sig and
+    * satisfy `pred`, which may refer to the sides as `x` and `y`.
+    */
+  private[operators] def bandPairs(
+      x: DataFrame, y: DataFrame, pred: Column = lit(true)): DataFrame =
+    x.as("x")
+      .join(y.as("y"), col("x.band") === col("y.band") && col("x.sig") === col("y.sig") && pred)
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .distinct()
+
+  /** Each document's (doc_id, h) rows with the hash's corpus document
+    * frequency, ranked rarest first: `pos` (ties by h) and the doc's size
+    * `n`. The prefix filters of [[ppJoinPairsFrom]] and [[containmentPairs]]
+    * cut on it.
+    */
+  private def dfOrdered(sh: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val dfr = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
+    sh.join(dfr, Seq("h"))
+      .withColumn("pos", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+  }
+
   /** Prefix-filtered EXACT Jaccard pairs at threshold 1/2 (see the
     * dd_ppjoin comment) — exposed for PpJoinSpec's brute-force equality.
     */
   def ppJoinPairs(s: SparkSession, docs: DataFrame): DataFrame =
-    ppJoinPairsFrom(s, docs, None)
+    ppJoinPairsFrom(hashedShingles(docShinglesOf(s, docs, 3)).cache())
 
-  /** [[ppJoinPairs]] with an optional pre-built HASHED shingle table
-    * (columns doc_id, h — [[docShinglesOf]] output hashed, restricted to
-    * exactly `docs`' documents). dd_lsh_eval passes its own cached table
-    * (r18): the eval previously re-shingled and re-hashed the corpus a
-    * second time inside the truth side of the same query. Per-doc
-    * shingling is document-local, so a stratum's shingle table is the
-    * filter of the full one — the caller's restriction is equivalence-
-    * preserving by construction.
+  /** [[ppJoinPairs]] over a pre-built HASHED shingle table (doc_id, h).
+    * dd_lsh_eval passes its own cached table (r18): the eval previously
+    * re-shingled and re-hashed the corpus a second time inside the truth
+    * side of the same query. Per-doc shingling is document-local, so a
+    * stratum's shingle table is the filter of the full one.
     */
-  private[operators] def ppJoinPairsFrom(s: SparkSession, docs: DataFrame,
-      shOpt: Option[DataFrame]): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // feeds the df rollup, the ordering join, both verify sides and the
-    // size rollup — cache once; rows are (doc_id, 8-byte h), never text
-    val sh = shOpt.getOrElse(docShinglesOf(s, docs, 3)
-      .select($"doc_id", Exprs.hash60($"shingle").as("h"))
-      .cache())
-    val dfr = sh.groupBy($"h").agg(count(lit(1)).as("df"))
-    val ordered = sh.join(dfr, Seq("h"))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy($"doc_id").orderBy($"df", $"h")))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy($"doc_id")))
-    // prefix length |x| − ⌈|x|/2⌉ + 1, all-integer so the cut is
+  private[operators] def ppJoinPairsFrom(sh: DataFrame): DataFrame = {
+    // `sh` feeds the df rollup, the ordering join, both verify sides and
+    // the size rollup — callers cache it; rows are (doc_id, 8-byte h).
+    // Prefix length |x| − ⌈|x|/2⌉ + 1, all-integer so the cut is
     // bit-identical cross-engine
-    val pref = ordered
-      .filter($"pos" <= $"n" - expr("(n + 1) DIV 2") + 1)
-      .select($"doc_id", $"h", $"n")
+    val pref = dfOrdered(sh)
+      .filter(col("pos") <= col("n") - expr("(n + 1) DIV 2") + 1)
+      .select(col("doc_id"), col("h"), col("n"))
     val cand = pref.as("a")
       .join(pref.as("b"),
-        $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id" &&
-          $"b.n" * 2 >= $"a.n" && $"a.n" * 2 >= $"b.n")
-      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
+        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
+          col("b.n") * 2 >= col("a.n") && col("a.n") * 2 >= col("b.n"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    val com = cand
-      .join(sh.as("x"), $"doc_a" === $"x.doc_id")
-      .join(sh.as("y"), $"doc_b" === $"y.doc_id" && $"y.h" === $"x.h")
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("common"))
-    val counts = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    com
-      .join(counts.as("ca"), $"doc_a" === $"ca.doc_id")
-      .join(counts.as("cb"), $"doc_b" === $"cb.doc_id")
-      .withColumn("jaccard",
-        round($"common".cast("double") / ($"ca.n" + $"cb.n" - $"common").cast("double"), 6))
-      .filter($"jaccard" >= 0.5)
-      .select($"doc_a", $"doc_b", $"common", $"jaccard")
+    withJaccard(commonCounts(cand, sh), sh).filter(col("jaccard") >= 0.5)
   }
 
   /** Prefix-filtered EXACT containment pairs at threshold 3/4 (see the
@@ -519,15 +581,8 @@ object Dedup {
     */
   def containmentPairs(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val sh = docShinglesOf(s, docs, 3)
-      .select($"doc_id", Exprs.hash60($"shingle").as("h"))
-      .cache()
-    val dfr = sh.groupBy($"h").agg(count(lit(1)).as("df"))
-    val ordered = sh.join(dfr, Seq("h"))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy($"doc_id").orderBy($"df", $"h")))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy($"doc_id")))
+    val sh = hashedShingles(docShinglesOf(s, docs, 3)).cache()
+    val ordered = dfOrdered(sh)
     // containment prefix: if B misses ALL of A's first n − ⌈3n/4⌉ + 1
     // df-rarest tokens, then |A∩B| ≤ ⌈3n/4⌉ − 1 < (3/4)·n — so every
     // qualifying B shares a prefix token (completeness is a theorem)
@@ -547,29 +602,25 @@ object Dedup {
     val sized = cand.join(counts.as("cb"), $"doc_b" === $"cb.doc_id")
       .filter($"cb.n" * 4 >= $"na" * 3)
       .select($"doc_a", $"doc_b", $"na")
-    sized
-      .join(sh.as("x"), $"doc_a" === $"x.doc_id")
-      .join(sh.as("y"), $"doc_b" === $"y.doc_id" && $"y.h" === $"x.h")
-      .groupBy($"doc_a", $"doc_b", $"na").agg(count(lit(1)).as("common"))
+    commonCounts(sized, sh, "na")
       .withColumn("containment",
         round($"common".cast("double") / $"na".cast("double"), 6))
       .filter($"containment" >= 0.75)
       .select($"doc_a", $"doc_b", $"common", $"containment")
   }
 
+  /** MinHash+LSH near-dup pairs over any (doc_id, text) DataFrame:
+    * K-minhash signature per doc, banded bucket join for candidates, exact
+    * Jaccard verify on candidates only. `threshold` is on verified Jaccard.
+    */
   def minhashLshPairs(
       s: SparkSession, docs: DataFrame,
       k: Int = 32, bands: Int = 8, threshold: Double = 0.5): DataFrame = {
     import s.implicits._
     val sh = docShinglesOf(s, docs, 3).cache()
-    val sig = minhashSignatures(sh, k)
-    val buckets = minhashBandBuckets(sig, k, bands)
-    val cands = buckets.as("x")
-      .join(buckets.as("y"),
-        $"x.band" === $"y.band" && $"x.sig" === $"y.sig" && $"x.doc_id" < $"y.doc_id")
-      .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
-      .distinct()
-    jaccardFor(cands, sh).filter($"jaccard" >= threshold)
+    val buckets = minhashBandBuckets(minhashSignatures(sh, k), k, bands)
+    val cands = bandPairs(buckets, buckets, $"x.doc_id" < $"y.doc_id")
+    jaccardFor(cands, hashedShingles(sh)).filter($"jaccard" >= threshold)
   }
 
   /** dd_lsh_eval's measurement over an arbitrary documents-shaped frame —
@@ -606,28 +657,20 @@ object Dedup {
     // jaccardFor) AND the exact-truth side (r18): the eval previously
     // re-hashed the cached strings per consumer and re-shingled the whole
     // corpus again inside ppJoinPairs — md5 work, paid twice in one query.
-    val shh = sh.select($"doc_id", Exprs.hash60($"shingle").as("h")).cache()
-    val sig = minhashSignatures(sh, 32)
-    val buckets = minhashBandBuckets(sig, 32, 8)
-    val cands = buckets.as("x")
-      .join(buckets.as("y"),
-        $"x.band" === $"y.band" && $"x.sig" === $"y.sig" && $"x.doc_id" < $"y.doc_id")
-      .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
-      .distinct().cache()
+    val shh = hashedShingles(sh).cache()
+    val buckets = minhashBandBuckets(minhashSignatures(sh, 32), 32, 8)
+    val cands = bandPairs(buckets, buckets, $"x.doc_id" < $"y.doc_id").cache()
     // the exact truth is independent of the LSH chain — overlap it with
     // the candidate/verify counts on a driver thread (guide §2.6; its
-    // 3.5 s job previously serialized after ~3 s of LSH jobs)
+    // 3.5 s job previously serialized after ~3 s of LSH jobs; run serially
+    // the query took 10.7 s instead of 9.0 s at sf0.1 on 4 cores)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val truthShh =
-      if (truthStride > 1) shh.filter($"doc_id" % truthStride === 0) else shh
-    val truthDocs =
-      if (truthStride > 1) docs.filter($"doc_id" % truthStride === 0) else docs
-    val nTrueF = Future(
-      ppJoinPairsFrom(s, truthDocs, Some(truthShh)).count())
+    val nTrueF = Future(ppJoinPairsFrom(
+      if (truthStride > 1) shh.filter($"doc_id" % truthStride === 0) else shh).count())
     val nCand = cands.count()
-    val verified = jaccardForHashed(cands, shh).filter($"jaccard" >= 0.5).cache()
+    val verified = jaccardFor(cands, shh).filter($"jaccard" >= 0.5).cache()
     val nVerified = verified.count()
     val nHit =
       if (truthStride > 1)
@@ -840,50 +883,29 @@ object Dedup {
     // cross-engine and the oracle row still pins exact semantics.
     sqlChecked(
       "dd_ngram_jaccard",
-      s"""WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g')), '\\s+'),
-        |                w -> w <> '') AS w
-        |  FROM documents),
-        |sh0 AS (
-        |  SELECT doc_id, ${sqlHash60("shingle")} AS h FROM (
-        |    SELECT DISTINCT doc_id, shingle FROM (
-        |      SELECT doc_id,
-        |        unnest(list_transform(generate_series(1, len(w)-2),
-        |                              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
-        |      FROM toks WHERE len(w) >= 3))),
+      s"""WITH ${hashedShinglesCtes("sh0")},
         |sh AS (
         |  SELECT doc_id, h FROM sh0
         |  WHERE h NOT IN (
         |    SELECT h FROM sh0 GROUP BY h HAVING count(*) > $HotShingleDfCap)),
-        |counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
+        |overlap AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
         |  FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, common,
-        |  round(common / CAST(ca.n + cb.n - common AS DOUBLE), 6) AS jaccard
-        |FROM pairs JOIN counts ca ON doc_a = ca.doc_id
-        |           JOIN counts cb ON doc_b = cb.doc_id
-        |WHERE round(common / CAST(ca.n + cb.n - common AS DOUBLE), 6) >= 0.2
+        |  GROUP BY 1, 2),
+        |${jaccardCtes("", "overlap", "sh", 0.2)}
+        |SELECT doc_a, doc_b, common, jaccard FROM pairs
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val sh0 = docShingles(s, dir).select($"doc_id", Exprs.hash60($"shingle").as("h"))
+      val sh0 = hashedShingles(docShinglesOf(s, Tables.documents(s, dir), 3))
       val hot = sh0.groupBy($"h").agg(count(lit(1)).as("df"))
         .filter($"df" > HotShingleDfCap).select($"h")
       val sh = sh0.join(hot, Seq("h"), "left_anti").cache()
-      val counts = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
       val pairs = sh.as("a")
         .join(sh.as("b"), $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
         .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
         .agg(count(lit(1)).as("common"))
-      pairs
-        .join(counts.as("ca"), $"doc_a" === $"ca.doc_id")
-        .join(counts.as("cb"), $"doc_b" === $"cb.doc_id")
-        .withColumn("jaccard",
-          round($"common".cast("double") / ($"ca.n" + $"cb.n" - $"common").cast("double"), 6))
+      withJaccard(pairs, sh)
         .filter($"jaccard" >= 0.2)
-        .select($"doc_a", $"doc_b", $"common", $"jaccard")
         .transform(d => QueryDef.largeSort(d, $"doc_a", $"doc_b"))
     },
 
@@ -909,40 +931,9 @@ object Dedup {
     // recall — exactness).
     sqlChecked(
       "dd_ppjoin",
-      s"""WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g')), '\\s+'),
-        |                w -> w <> '') AS w
-        |  FROM documents WHERE $ExactDocsGateSql),
-        |sh AS (
-        |  SELECT doc_id, ${sqlHash60("shingle")} AS h FROM (
-        |    SELECT DISTINCT doc_id, shingle FROM (
-        |      SELECT doc_id,
-        |        unnest(list_transform(generate_series(1, len(w)-2),
-        |                              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
-        |      FROM toks WHERE len(w) >= 3))),
-        |df AS (SELECT h, count(*) AS df FROM sh GROUP BY h),
-        |ordered AS (
-        |  SELECT doc_id, h,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY df, h) AS pos,
-        |    count(*) OVER (PARTITION BY doc_id) AS n
-        |  FROM sh JOIN df USING (h)),
-        |pref AS (SELECT doc_id, h, n FROM ordered WHERE pos <= n - (n + 1) // 2 + 1),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM pref a JOIN pref b ON a.h = b.h AND a.doc_id < b.doc_id
-        |  WHERE 2 * b.n >= a.n AND 2 * a.n >= b.n),
-        |com AS (
-        |  SELECT doc_a, doc_b, count(*) AS common
-        |  FROM cand JOIN sh x ON x.doc_id = doc_a
-        |            JOIN sh y ON y.doc_id = doc_b AND y.h = x.h
-        |  GROUP BY doc_a, doc_b),
-        |counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)
-        |SELECT doc_a, doc_b, common,
-        |  round(common / CAST(ca.n + cb.n - common AS DOUBLE), 6) AS jaccard
-        |FROM com JOIN counts ca ON doc_a = ca.doc_id
-        |         JOIN counts cb ON doc_b = cb.doc_id
-        |WHERE round(common / CAST(ca.n + cb.n - common AS DOUBLE), 6) >= 0.5
+      s"""WITH ${hashedShinglesCtes("sh", s" WHERE $ExactDocsGateSql")},
+        |${ppJoinCtes("")}
+        |SELECT doc_a, doc_b, common, jaccard FROM pairs
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
       import s.implicits._
       QueryDef.largeSort(
@@ -967,35 +958,15 @@ object Dedup {
     // including a planted slice-of-another doc.
     sqlChecked(
       "dd_containment",
-      s"""WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g')), '\\s+'),
-        |                w -> w <> '') AS w
-        |  FROM documents WHERE $ExactDocsGateSql),
-        |sh AS (
-        |  SELECT doc_id, ${sqlHash60("shingle")} AS h FROM (
-        |    SELECT DISTINCT doc_id, shingle FROM (
-        |      SELECT doc_id,
-        |        unnest(list_transform(generate_series(1, len(w)-2),
-        |                              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
-        |      FROM toks WHERE len(w) >= 3))),
-        |df AS (SELECT h, count(*) AS df FROM sh GROUP BY h),
-        |ordered AS (
-        |  SELECT doc_id, h,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY df, h) AS pos,
-        |    count(*) OVER (PARTITION BY doc_id) AS n
-        |  FROM sh JOIN df USING (h)),
+      s"""WITH ${hashedShinglesCtes("sh", s" WHERE $ExactDocsGateSql")},
+        |${dfOrderedCtes("")},
         |pref AS (SELECT doc_id, h, n FROM ordered WHERE pos <= n - (3 * n + 3) // 4 + 1),
         |counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
         |cand AS (
         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n AS na
         |  FROM pref a JOIN ordered b ON a.h = b.h AND a.doc_id <> b.doc_id
         |  WHERE 4 * b.n >= 3 * a.n),
-        |com AS (
-        |  SELECT doc_a, doc_b, na, count(*) AS common
-        |  FROM cand JOIN sh x ON x.doc_id = doc_a
-        |            JOIN sh y ON y.doc_id = doc_b AND y.h = x.h
-        |  GROUP BY doc_a, doc_b, na)
+        |${commonCte("com", "cand", "sh", "na")}
         |SELECT doc_a, doc_b, common,
         |  round(common / CAST(na AS DOUBLE), 6) AS containment
         |FROM com
@@ -1030,7 +1001,7 @@ object Dedup {
     // dedup at 100 TB where exact verification of everything is
     // unaffordable). The oracle replays the LSH stages via the shared CTE
     // chain and the truth via the SAME prefix-filter formulation as
-    // dd_ppjoin's oracle (tsh..tp below) over the ExactDocsGateSql stratum —
+    // dd_ppjoin's oracle (ppJoinCtes over tsh) over the ExactDocsGateSql stratum —
     // at the driver correctness scales the gate passes every doc (full
     // truth); above the cap the truth runs on the doc_id % 4 stratum and
     // lsh_recall becomes the sampled-recall estimate (n_hit counts verified
@@ -1040,33 +1011,13 @@ object Dedup {
       "dd_lsh_eval",
       s"""WITH ${minhashPairsCtes(k = 32, bands = 8, threshold = 0.5)},
         |tsh AS (SELECT doc_id, h FROM shh WHERE $ExactDocsGateSql),
-        |tdf AS (SELECT h, count(*) AS df FROM tsh GROUP BY h),
-        |tord AS (
-        |  SELECT doc_id, h,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY df, h) AS pos,
-        |    count(*) OVER (PARTITION BY doc_id) AS n
-        |  FROM tsh JOIN tdf USING (h)),
-        |tpref AS (SELECT doc_id, h, n FROM tord WHERE pos <= n - (n + 1) // 2 + 1),
-        |tcand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM tpref a JOIN tpref b ON a.h = b.h AND a.doc_id < b.doc_id
-        |  WHERE 2 * b.n >= a.n AND 2 * a.n >= b.n),
-        |tcom AS (
-        |  SELECT doc_a, doc_b, count(*) AS common
-        |  FROM tcand JOIN tsh x ON x.doc_id = doc_a
-        |             JOIN tsh y ON y.doc_id = doc_b AND y.h = x.h
-        |  GROUP BY doc_a, doc_b),
-        |tcnt AS (SELECT doc_id, count(*) AS n FROM tsh GROUP BY doc_id),
-        |tp AS (
-        |  SELECT doc_a, doc_b FROM tcom
-        |  JOIN tcnt ca ON doc_a = ca.doc_id JOIN tcnt cb ON doc_b = cb.doc_id
-        |  WHERE round(common / CAST(ca.n + cb.n - common AS DOUBLE), 6) >= 0.5),
+        |${ppJoinCtes("t")},
         |hit AS (
         |  SELECT doc_a, doc_b FROM mh_pairs
         |  WHERE ((SELECT count(*) FROM documents) <= $ExactPairsDocCap
         |         OR (doc_a % $ExactPairsStride = 0 AND doc_b % $ExactPairsStride = 0))),
         |m AS (SELECT
-        |  (SELECT count(*) FROM tp) AS n_true,
+        |  (SELECT count(*) FROM tpairs) AS n_true,
         |  (SELECT count(*) FROM cands) AS n_cand,
         |  (SELECT count(*) FROM mh_pairs) AS n_verified,
         |  (SELECT count(*) FROM hit) AS n_hit)

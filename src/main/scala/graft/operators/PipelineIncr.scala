@@ -99,16 +99,10 @@ object PipelineIncr {
     val buckets = Dedup
       .minhashBandBuckets(Dedup.minhashSignatures(sh, 32), 32, 8)
       .localCheckpoint(false)
-    val ords = s2.select($"doc_id", $"ord")
-    val cands = buckets.as("x").join(buckets.as("y"),
-        $"x.band" === $"y.band" && $"x.sig" === $"y.sig" &&
-          $"x.doc_id" =!= $"y.doc_id")
-      .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b")).distinct()
-      .join(ords.select($"doc_id".as("doc_a"), $"ord".as("ord_a")), Seq("doc_a"))
-      .join(ords.select($"doc_id".as("doc_b"), $"ord".as("ord_b")), Seq("doc_b"))
-      .filter($"ord_a" < $"ord_b")
-      .select($"doc_a", $"doc_b")
-    val near = Dedup.jaccardFor(cands, sh).filter($"jaccard" >= 0.5)
+    // ord is a function of doc_id, and every bucket row is an s2 doc's,
+    // so the anchor order filters inside the band join
+    val cands = Dedup.bandPairs(buckets, buckets, ord($"x.doc_id") < ord($"y.doc_id"))
+    val near = Dedup.jaccardFor(cands, Dedup.hashedShingles(sh)).filter($"jaccard" >= 0.5)
       .select($"doc_b".as("doc_id")).distinct()
     val keeps = s2.select($"doc_id").join(near, Seq("doc_id"), "left_anti")
     CascadeOut(s1, s2, buckets, keeps)
@@ -219,17 +213,12 @@ object PipelineIncr {
     val shA = Dedup.docShinglesOf(s, a2, 3).localCheckpoint(false)
     val bA = Dedup.minhashBandBuckets(Dedup.minhashSignatures(shA, 32), 32, 8)
       .localCheckpoint(false)
-    val candBase = bA.as("y").join(state.buckets.as("x"),
-        $"x.band" === $"y.band" && $"x.sig" === $"y.sig")
-      .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b")).distinct()
-    val candArr = bA.as("x").join(bA.as("y"),
-        $"x.band" === $"y.band" && $"x.sig" === $"y.sig" &&
-          $"x.doc_id" < $"y.doc_id")
-      .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b")).distinct()
+    val candBase = Dedup.bandPairs(state.buckets, bA)
+    val candArr = Dedup.bandPairs(bA, bA, $"x.doc_id" < $"y.doc_id")
     val baseCandDocs = state.s2Docs
       .join(candBase.select($"doc_a".as("doc_id")).distinct(), "doc_id")
     val shAll = shA.union(Dedup.docShinglesOf(s, baseCandDocs, 3))
-    val near = Dedup.jaccardFor(candBase.union(candArr), shAll)
+    val near = Dedup.jaccardFor(candBase.union(candArr), Dedup.hashedShingles(shAll))
       .filter($"jaccard" >= 0.5)
       .select($"doc_b".as("doc_id")).distinct()
     val a3 = a2.select($"doc_id").join(near, Seq("doc_id"), "left_anti")
