@@ -1,5 +1,6 @@
 package graft.freshkart
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,10 +44,18 @@ object SalesPipeline {
   /** S1 — 31 daily order files, each a multiLine JSON array of structs
     * (reference `pipeline_pyspark.py:94-96`). One multi-file read, not a
     * loop-and-union: at scale the files parallelize across executors.
+    *
+    * The glob is expanded here, on the driver: handed the pattern itself,
+    * Spark probes it as a possible streaming-sink directory and logs a
+    * FileNotFoundException for every read. No match fails the read.
     */
-  def readOrders(spark: SparkSession, inputDir: String): DataFrame =
-    spark.read.option("multiLine", "true").schema(Schemas.orders)
-      .json(s"$inputDir/orders_*.json")
+  def readOrders(spark: SparkSession, inputDir: String): DataFrame = {
+    val glob = new Path(inputDir, "orders_*.json")
+    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Option(fs.globStatus(glob)).toSeq.flatten.map(_.getPath.toString)
+    require(files.nonEmpty, s"no order files match $glob")
+    spark.read.option("multiLine", "true").schema(Schemas.orders).json(files: _*)
+  }
 
   /** S2 — CSV scans with explicit schema (reference `:97-98` infers). */
   def readCustomers(spark: SparkSession, inputDir: String): DataFrame =
@@ -153,7 +162,10 @@ object SalesPipeline {
 
   /** A3 + P2 + P6 + O1 — the daily_city_sales rollup: two countDistincts,
     * three sums, net = gross + refunds (ADDITION: amounts are negative),
-    * rename, deterministic sort (reference `:175-184,195`).
+    * rename, deterministic sort (reference `:175-184,195`). The sort is
+    * `smallSort`: the output has one row per (date, city, channel), and
+    * `run` collects it to the driver, so driver memory bounds it anyway; a
+    * range sort would re-run the rollup to sample its bounds.
     */
   def dailyCitySales(perOrderRef: DataFrame): DataFrame =
     perOrderRef
@@ -168,7 +180,7 @@ object SalesPipeline {
         (col("gross_revenue_eur").cast("decimal(20,8)")
           + col("refunds_eur").cast("decimal(20,8)")).cast("double"))
       .withColumnRenamed("order_date", "date")
-      .transform(d => graft.QueryDef.largeSort(d, col("date"), col("city"), col("channel")))
+      .transform(d => graft.QueryDef.smallSort(d, col("date"), col("city"), col("channel")))
 
   /** orders_clean — the 7-column per-order table (NO refunds/net: the
     * reference keeps the two sink schemas distinct, SURVEY §7.1.8;
@@ -180,26 +192,30 @@ object SalesPipeline {
 
   // --- end-to-end -----------------------------------------------------------
 
-  /** The pipeline's frames, plus the cached customer dimension they read,
-    * which the caller unpersists once its sinks have run.
+  /** The two frames every output shares — the exploded paid order lines
+    * (`flat`) and the per-order table with refunds (`perOrderRef`) — and
+    * the customer dimension behind it. The outputs derive from them, so a
+    * caller that persists the three computes each once for all sinks.
     */
   final case class Result(
-      rejects: DataFrame,
-      ordersClean: DataFrame,
-      dailyCitySales: DataFrame,
-      customersClean: DataFrame)
+      customersClean: DataFrame,
+      flat: DataFrame,
+      perOrderRef: DataFrame) {
+    def rejects: DataFrame = rejectsSplit(flat)._1
+    def ordersClean: DataFrame = SalesPipeline.ordersClean(perOrderRef)
+    def dailyCitySales: DataFrame = SalesPipeline.dailyCitySales(perOrderRef)
+  }
 
-  /** Full logical pipeline (no sinks): reads → cleaned → split → dedup →
-    * aggregate → joins → final rollup.
+  /** Full logical pipeline (no sinks, no job, nothing cached): reads →
+    * cleaned → split → dedup → aggregate → joins.
     */
   def build(spark: SparkSession, inputDir: String): Result = {
-    val customersClean = cleanCustomers(readCustomers(spark, inputDir)).cache()
+    val customersClean = cleanCustomers(readCustomers(spark, inputDir))
     val refundsClean = cleanRefunds(readRefunds(spark, inputDir))
     val flat = ordersFlat(readOrders(spark, inputDir))
-    val (rejects, positive) = rejectsSplit(flat)
-    val perOrder = perOrderAgg(dedupFirst(positive))
+    val perOrder = perOrderAgg(dedupFirst(rejectsSplit(flat)._2))
     val perOrderRef = refundRollup(activeEnrich(perOrder, customersClean), refundsClean)
-    Result(rejects, ordersClean(perOrderRef), dailyCitySales(perOrderRef), customersClean)
+    Result(customersClean, flat, perOrderRef)
   }
 
   /** Run with sinks, reference lifecycle (`:59-224`): the rejects CSV
@@ -208,11 +224,18 @@ object SalesPipeline {
     * and the two DB tables via [[Sinks.writeDbTable]] (Parquet fallback —
     * no SQLite JDBC driver resolvable offline; SURVEY §7.2.3). Each final
     * frame behind a CSV is collected once.
+    *
+    * The customer dim (the reference's one `.cache()`, `:103`), `flat` and
+    * `perOrderRef` are cached here, in that order, so each is computed once:
+    * the orders are parsed once and the per-order table built once per run.
+    * Every sink's plan reads the cached data in place of the subtree.
     */
   def run(spark: SparkSession, config: Config): Unit = {
     val r = build(spark, config.inputDir)
+    val shared = Seq(r.customersClean, r.flat, r.perOrderRef)
+    shared.foreach(_.cache())
     try sinks(r, config)
-    finally r.customersClean.unpersist()
+    finally shared.foreach(_.unpersist())
   }
 
   private def sinks(r: Result, config: Config): Unit = {
@@ -220,7 +243,11 @@ object SalesPipeline {
     // fk_rejects oracle uses the same); (order_id, pos) alone ties between
     // an order's original and duplicate records, and Spark's sort is not
     // stable on ties — the golden-file byte compare would be plan-dependent.
-    val rejects = r.rejects.orderBy("order_id", "created_at", "pos").drop("pos")
+    // smallSort: the rejects are collected to the driver right below, so
+    // driver memory bounds them anyway; a range sort would re-read `flat`
+    // to sample its bounds.
+    val rejects = graft.QueryDef.smallSort(r.rejects,
+      col("order_id"), col("created_at"), col("pos")).drop("pos")
     val rejectRows = rejects.collect().toSeq
     if (rejectRows.nonEmpty)
       Sinks.writeSingleCsv(rejects.schema, rejectRows,

@@ -2,6 +2,12 @@ package graft.freshkart
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 import graft.SparkSuite
@@ -19,6 +25,13 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     val orders = SalesPipeline.readOrders(spark, fixtures)
     orders.count() shouldBe (31 * 103)
     orders.schema shouldBe Schemas.orders
+  }
+
+  test("S1: a directory without orders_*.json fails the read") {
+    val empty = Files.createTempDirectory("fk-no-orders")
+    val e = intercept[IllegalArgumentException](SalesPipeline.readOrders(spark, empty.toString))
+    e.getMessage should include("orders_*.json")
+    Sinks.deleteRecursively(empty.toFile)
   }
 
   test("trap 7.1.1: dedup keeps exactly ONE item line per order — first record, first item") {
@@ -145,6 +158,48 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     SalesPipeline.run(spark, Config(fixtures, out, s"$out/sales.db"))
     spark.sharedState.cacheManager.isEmpty shouldBe true
     Sinks.deleteRecursively(new java.io.File(out))
+  }
+
+  test("run parses the orders JSON in exactly one stage") {
+    // A stage that reads a cache still lists the scan among its RDD's
+    // ancestors, so the signal is the scan's row metric: only a stage that
+    // ran the scan updates it. Its accumulator ids come from the SQL plans
+    // (a cached plan is a child of the InMemoryTableScan that reads it).
+    val scanRows = ConcurrentHashMap.newKeySet[Long]()
+    val stages = new ConcurrentLinkedQueue[Set[Long]]()
+    def visit(p: SparkPlanInfo): Unit = {
+      if (p.nodeName.toLowerCase.startsWith("scan json"))
+        p.metrics.filter(_.name == "number of output rows").foreach(m => scanRows.add(m.accumulatorId))
+      p.children.foreach(visit)
+    }
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => visit(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => visit(u.sparkPlanInfo)
+        case _ =>
+      }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        stages.add(s.stageInfo.accumulables.keySet.toSet)
+    }
+    val sc = spark.sparkContext
+    val out = Files.createTempDirectory("fk-one-parse").toString
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      SalesPipeline.run(spark, Config(fixtures, out, s"$out/sales.db"))
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    scanRows.size should be > 0
+    stages.asScala.count(_.exists(scanRows.contains)) shouldBe 1
+    Sinks.deleteRecursively(new java.io.File(out))
+  }
+
+  test("the fk_* queries leave no plan cached") {
+    spark.catalog.clearCache()
+    for (q <- Seq("fk_daily_city_sales", "fk_orders_clean", "fk_rejects")) {
+      graft.SparkEntry.queries(q)(spark, fixtures).write.format("noop").mode("overwrite").save()
+      withClue(q)(spark.sharedState.cacheManager.isEmpty shouldBe true)
+    }
   }
 
   test("per-day fan-out writes one file per distinct date, all 31 days") {
