@@ -18,7 +18,7 @@ object ColdBuilds {
 
   /** Run `body` (a cold build) and record its wall seconds under
     * `label:basename(dir)`. Returns `body`'s result. Call INSIDE the
-    * memo's getOrElseUpdate so only the one cold execution is recorded.
+    * memo's builder so only the one cold execution is recorded.
     */
   def timed[A](label: String, dir: String)(body: => A): A = {
     val t0 = System.nanoTime()

@@ -84,16 +84,10 @@ object PipelineIncremental {
     // against the rebuild-from-union insert semantics on BOTH the edge
     // sets and the served top-k (frozen base entries, same serve budget).
     import graft.operators.GraphAnn
-    // both index trees are run-scoped scratch — registered for shutdown
-    // cleanup like every GraphAnn-managed index dir (ADVICE r16)
-    val baseIdxP = java.nio.file.Files
-      .createTempDirectory("graft-incr-ann-base").toString
-    GraphAnn.rmOnExit(baseIdxP)
+    val baseIdxP = Scratch.dir("graft-incr-ann-base")
     val (_, tAnnBase) = timed(
       PipelineIncr.buildAnnIndex(spark, emb, state.keeps, baseIdxP))
-    val updIdxP = java.nio.file.Files
-      .createTempDirectory("graft-incr-ann-upd").toString
-    GraphAnn.rmOnExit(updIdxP)
+    val updIdxP = Scratch.dir("graft-incr-ann-upd")
     val (_, tAnnIngest) = timed(
       PipelineIncr.ingestAnnArrivals(spark, baseIdxP, emb, ingestKeeps, updIdxP))
     val unionKeeps = state.keeps.select("doc_id")

@@ -1,6 +1,5 @@
 package graft.freshkart
 
-import java.io.File
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.Locale
@@ -142,9 +141,4 @@ object Sinks {
     */
   def writePartitionedParquet(daily: DataFrame, dir: String): Unit =
     daily.write.mode("overwrite").partitionBy("date").parquet(dir)
-
-  private[freshkart] def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
 }

@@ -82,9 +82,9 @@ object Dedup {
   def exactPairsDocs(s: SparkSession, docs: DataFrame, n: Long): DataFrame =
     stratumAbove(docs, "doc_id", n)
 
-  /** Memoized per-(dir, JVM) document count (the ivfIndexDir TrieMap
-    * discipline) — the gate's only input, shared by every exact-baseline
-    * call site instead of a fresh count() action each.
+  /** Memoized per-(dir, JVM) document count — the gate's only input,
+    * shared by every exact-baseline call site instead of a fresh count()
+    * action each.
     *
     * IMMUTABILITY CONTRACT (ADVICE r14): the memo assumes a dir's tables
     * never change within one JVM — true for the driver's testdata dirs and
@@ -348,27 +348,17 @@ object Dedup {
     * — the production topology where each crawl snapshot extends a
     * persisted index.
     */
-  private val minhashIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def minhashIndexDir(s: SparkSession, dir: String): String =
-    minhashIndexDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("dd_minhash_incr", dir) {
-      import s.implicits._
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-minhash-index").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-        }
-        rm(new java.io.File(p))
-      }))
-      val existing = Tables.documents(s, dir)
-        .filter($"doc_id" % IncrMod =!= IncrRem)
-      val sig = minhashSignatures(docShinglesOf(s, existing, 3), 32)
-      minhashBandBuckets(sig, 32, 8)
-        .write.mode("overwrite").parquet(s"$p/buckets")
-      p
-    })
+    graft.Scratch.memoDir("graft-minhash-index", dir) { p =>
+      graft.ColdBuilds.timed("dd_minhash_incr", dir) {
+        import s.implicits._
+        val existing = Tables.documents(s, dir)
+          .filter($"doc_id" % IncrMod =!= IncrRem)
+        val sig = minhashSignatures(docShinglesOf(s, existing, 3), 32)
+        minhashBandBuckets(sig, 32, 8)
+          .write.mode("overwrite").parquet(s"$p/buckets")
+      }
+    }
 
   /** One AvailableNow pass of the arrival-dedup stream: parquet files
     * under `srcDir` (schema from the canonical documents table of
@@ -1072,12 +1062,10 @@ object Dedup {
       incrMinhashOracle) { (s, dir) =>
       import s.implicits._
       import org.apache.spark.sql.streaming.Trigger
-      val outDir = java.nio.file.Files
-        .createTempDirectory("dd-incr-stream-out").toString
-      val ckDir = java.nio.file.Files
-        .createTempDirectory("dd-incr-stream-ck").toString
+      val outDir = graft.Scratch.dir("dd-incr-stream-out")
+      val ckDir = graft.Scratch.dir("dd-incr-stream-ck")
       incrStreamPass(s, dir, Some("documents.parquet"), outDir, ckDir, dir)
-      s.read.option("basePath", outDir).parquet(s"$outDir/batch=*")
+      s.read.parquet(outDir) // partition discovery yields `batch`
         .select($"new_doc", $"old_doc", $"jaccard")
         .transform(d => QueryDef.largeSort(d, $"new_doc", $"old_doc"))
     },

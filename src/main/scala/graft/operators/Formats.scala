@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Sessions, Tables}
+import graft.{QueryDef, Scratch, Sessions, Tables}
 import graft.functions.Exprs
 import graft.QueryDef.sqlChecked
 
@@ -38,7 +38,7 @@ object Formats {
   private def roundTrip(
       s: org.apache.spark.sql.SparkSession, dir: String, format: String) = {
     import s.implicits._
-    val out = Files.createTempDirectory(s"graft-$format-rt").toString
+    val out = Scratch.dir(s"graft-$format-rt")
     val slice = Tables.lineitem(s, dir)
       .filter($"l_orderkey" < 5000)
       .select($"l_orderkey", $"l_returnflag", $"l_quantity", $"l_extendedprice")
@@ -81,7 +81,7 @@ object Formats {
         .filter($"l_orderkey" < 5000)
         .select($"l_orderkey", $"l_returnflag", $"l_quantity", $"l_extendedprice")
       def writeWith(codec: String): String = {
-        val out = scratchDir(s"graft-codec-$codec")
+        val out = Scratch.dir(s"graft-codec-$codec")
         slice.write.mode("overwrite").option("compression", codec).parquet(out)
         out
       }
@@ -128,7 +128,7 @@ object Formats {
         | CAST(SUM(CAST(c_acctbal AS DECIMAL(20,8))) AS DOUBLE) AS sum_bal
         |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val db = Files.createTempDirectory("graft-derby").resolve("db").toString
+      val db = Scratch.dir("graft-derby") + "/db"
       val url = s"jdbc:derby:$db;create=true"
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -269,14 +269,10 @@ object Formats {
   /** Day-partitioned events table with one day dynamically overwritten
     * (write-once per source dir per JVM).
     */
-  private val dynOverwriteDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def dynOverwriteDir(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    dynOverwriteDirs.getOrElseUpdate(dir, {
+    Scratch.memoDir("graft-dynover", dir) { p =>
       import s.implicits._
-      val p = scratchDir("graft-dynover")
       val ev = Tables.events(s, dir)
         .withColumn("day", date_format(date_trunc("day", $"ts"), "yyyy-MM-dd"))
       ev.write.mode("overwrite").partitionBy("day").parquet(p)
@@ -287,8 +283,7 @@ object Formats {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("day").parquet(p)
-      p
-    })
+    }
 
   /** MANIFEST-based snapshot versioning — the TIME-TRAVEL primitive every
     * table format (Delta/Iceberg/Hudi) builds on, shown bare: a table
@@ -396,22 +391,15 @@ object Formats {
     }
 
   /** Versioned-table fixture for io_time_travel (write-once per source dir
-    * per JVM): immutable data files + one manifest per version under the
-    * module scratch root.
+    * per JVM): immutable data files + one manifest per version in a
+    * scratch dir.
     */
-  private val versionedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def versionedTableDir(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    versionedDirs.getOrElseUpdate(dir, {
-      val root = scratchDir("graft-versioned")
-      buildVersionedTable(s, dir, root)
-      root
-    })
+    Scratch.memoDir("graft-versioned", dir)(buildVersionedTable(s, dir, _))
 
   /** Hardlink a FRESH per-call copy of the memoized versioned table into
-    * a new scratch root. The mutating queries (merge, cdf, vacuum) each
+    * a new scratch dir. The mutating queries (merge, cdf, vacuum) each
     * need their own table — sharing the memoized one would make results
     * depend on run order — but in production that table already EXISTS:
     * rebuilding it per call would bill the operator for fixture synthesis
@@ -424,7 +412,7 @@ object Formats {
   private def freshVersionedCopy(
       s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val src = versionedTableDir(s, dir)
-    val root = scratchDir("graft-versioned-copy")
+    val root = Scratch.dir("graft-versioned-copy")
     new java.io.File(src).listFiles().foreach { f =>
       val dst = java.nio.file.Paths.get(s"$root/${f.getName}")
       if (f.getName.endsWith(".parquet"))
@@ -568,7 +556,7 @@ object Formats {
       .find(_.getName.endsWith(".parquet")).get
     java.nio.file.Files.move(part.toPath,
       java.nio.file.Paths.get(s"$root/$name"))
-    rmTree(new java.io.File(tmp))
+    Scratch.rm(new java.io.File(tmp))
   }
 
   /** Write `df` as a PARALLEL immutable file GROUP `root/<base>-<i>.parquet`
@@ -590,7 +578,7 @@ object Formats {
       java.nio.file.Files.move(p.toPath, java.nio.file.Paths.get(s"$root/$name"))
       name
     }.toSeq
-    rmTree(new java.io.File(tmp))
+    Scratch.rm(new java.io.File(tmp))
     names
   }
 
@@ -771,19 +759,16 @@ object Formats {
       QueryDef.largeSort(diff, $"o_orderkey")
     }
 
+  private final val StatsPruneFiles = 8
+
   /** Range-clustered table fixture for io_stats_prune (write-once per
     * source dir per JVM): orders split into [[StatsPruneFiles]] contiguous
     * o_orderkey ranges, one immutable file each, plus a per-file min/max
     * STATS manifest (the zone map) written beside them.
     */
-  private val statsDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private final val StatsPruneFiles = 8
-
   def statsTableDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    statsDirs.getOrElseUpdate(dir, {
+    Scratch.memoDir("graft-stats", dir) { root =>
       import s.implicits._
-      val root = scratchDir("graft-stats")
       val orders = Tables.orders(s, dir)
       val maxKey = orders.agg(max($"o_orderkey")).collect().head.getLong(0)
       val width = maxKey / StatsPruneFiles + 1
@@ -800,8 +785,7 @@ object Formats {
       }
       stats.toDF("file", "min_key", "max_key", "n_rows")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/_stats")
-      root
-    })
+    }
 
   // FILE-LEVEL DATA SKIPPING by column stats (Delta data skipping /
   // Iceberg metadata filtering / parquet row-group zone maps lifted to the
@@ -1092,7 +1076,7 @@ object Formats {
       }
       val before = srcAgg()
       // the clone: one manifest write, data lines are absolute refs
-      val cloneRoot = scratchDir("graft-clone")
+      val cloneRoot = Scratch.dir("graft-clone")
       writeManifest(cloneRoot, 3, manifestLines(srcRoot, 3).map(f => s"$srcRoot/$f"))
       // diverge the clone (two stacked DV deletes), source untouched
       applyDvDeletes(s, cloneRoot)
@@ -1109,6 +1093,8 @@ object Formats {
           "clone_zero_copy", "source_unaffected")
     }
 
+  private val EvoBuckets = 4
+
   /** Write-once PARTITION-EVOLUTION fixture per source dir per JVM (the
     * statsTableDir discipline): the even-key half of orders written under
     * SPEC 1 (hash-bucketed by `o_orderkey % EvoBuckets` — the original
@@ -1118,14 +1104,9 @@ object Formats {
     * partition tuple — Iceberg's partition-spec-per-file design, which is
     * what lets a table change its partitioning WITHOUT rewriting history.
     */
-  private val evoDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val EvoBuckets = 4
-
   def evoTableDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    evoDirs.getOrElseUpdate(dir, {
+    Scratch.memoDir("graft-evo", dir) { root =>
       import s.implicits._
-      val root = scratchDir("graft-evo")
       val orders = Tables.orders(s, dir)
       val lines = scala.collection.mutable.Buffer.empty[String]
       for (b <- 0 until EvoBuckets) {
@@ -1147,8 +1128,7 @@ object Formats {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$root/manifest-evo.txt"),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      root
-    })
+    }
 
   // PARTITION EVOLUTION (Iceberg spec §partition-evolution): the table
   // changed its partition scheme mid-life — old files stay under the old
@@ -1313,11 +1293,8 @@ object Formats {
     * distributed pass (group by source file, [[graft.functions.BloomAgg]]
     * fold — merge is bitwise OR, so the build is partitioning-independent).
     */
-  private val bloomDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def bloomIndexDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    bloomDirs.getOrElseUpdate(dir, {
+    Scratch.memo("graft-blooms", dir) {
       import s.implicits._
       val root = statsTableDir(s, dir)
       val files = s.read.parquet(s"$root/_stats")
@@ -1330,7 +1307,7 @@ object Formats {
         .agg(graft.functions.BloomAgg($"h", BloomIdxBits, BloomIdxProbes).as("bits"))
         .coalesce(1).write.mode("overwrite").parquet(s"$root/_blooms")
       root
-    })
+    }
 
   // FILE-LEVEL BLOOM-FILTER INDEX (Parquet column bloom filters / Delta's
   // bloom index, lifted to the planner): min/max zone maps only help
@@ -1407,32 +1384,29 @@ object Formats {
   /** Write-once bucketed (8 buckets on custkey, sorted within) orders and
     * customer tables per source dir. Table names carry the dir hash so
     * alternating source dirs in one session don't collide in the catalog;
-    * data lands under the module scratch root (external tables), cleaned
-    * by the shutdown hook. Bucket count is a layout choice: at 100 TB it
-    * would be sized so bucket ≈ target task size (and both sides MUST
-    * agree — Spark only prunes the shuffle when counts match).
+    * data lands in scratch dirs (external tables), deleted on JVM exit.
+    * Bucket count is a layout choice: at 100 TB it would be sized so
+    * bucket ≈ target task size (and both sides MUST agree — Spark only
+    * prunes the shuffle when counts match).
     */
-  private val bucketedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   def bucketedTables(
       s: org.apache.spark.sql.SparkSession, dir: String): (String, String) =
-    bucketedDirs.getOrElseUpdate(dir, {
+    Scratch.memo("graft-bkt", dir) {
       import s.implicits._
       val tag = java.lang.Integer.toHexString(dir.hashCode)
       val (ot, ct) = (s"graft_bkt_orders_$tag", s"graft_bkt_customer_$tag")
       Tables.orders(s, dir).select($"o_custkey", $"o_totalprice")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .option("path", scratchDir("graft-bkt-orders"))
+        .option("path", Scratch.dir("graft-bkt-orders"))
         .saveAsTable(ot)
       Tables.customer(s, dir).select($"c_custkey", $"c_mktsegment")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .option("path", scratchDir("graft-bkt-customer"))
+        .option("path", Scratch.dir("graft-bkt-customer"))
         .saveAsTable(ct)
       (ot, ct)
-    })
+    }
 
   /** Small-files COMPACTION (`coalesce`, the OPTIMIZE/bin-packing half of
     * lakehouse maintenance): a 64-tiny-file table — the classic streaming-
@@ -1456,7 +1430,7 @@ object Formats {
         |FROM events""".stripMargin) { (s, dir) =>
       import s.implicits._
       val smallDir = smallFilesDir(s, dir)
-      val outDir = scratchDir("graft-compacted")
+      val outDir = Scratch.dir("graft-compacted")
       val small = s.read.parquet(smallDir)
       // coalesce can only REDUCE partition count, and the 64-file scan is
       // bin-packed by min(maxPartitionBytes, max(openCost, bytes/cores)) —
@@ -1480,45 +1454,17 @@ object Formats {
     }
 
   /** 64-small-file events layout (write-once per source dir per JVM). */
-  private val smallFileDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def smallFilesDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    smallFileDirs.getOrElseUpdate(dir, {
-      val p = scratchDir("graft-small-files")
+    Scratch.memoDir("graft-small-files", dir) { p =>
       Tables.events(s, dir).repartition(64).write.mode("overwrite").parquet(p)
-      p
-    })
-
-  /** Scratch root for this module's derived-layout temp dirs (evolved
-    * vintages, small-files fixtures, compaction outputs) — one shutdown
-    * hook removes the whole tree (the Events.scratchRoot discipline;
-    * partitionedEventsDir keeps its own bespoke hook for historical
-    * reasons).
-    */
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val root = Files.createTempDirectory("graft-formats-scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(root.toFile)))
-    root
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    val kids = f.listFiles(); if (kids != null) kids.foreach(rmTree); f.delete()
-  }
-
-  private def scratchDir(prefix: String): String =
-    Files.createTempDirectory(scratchRoot, prefix).toString
+    }
 
   /** Two-vintage parquet dir for io_schema_evolution (write-once per source
-    * dir per JVM, the partitionedEventsDir discipline).
+    * dir per JVM).
     */
-  private val evolvedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def evolvedOrdersDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    evolvedDirs.getOrElseUpdate(dir, {
+    Scratch.memoDir("graft-evolved-orders", dir) { p =>
       import s.implicits._
-      val p = scratchDir("graft-evolved-orders")
       val orders = Tables.orders(s, dir)
       orders.filter($"o_orderkey" % 2 === 0)
         .select($"o_orderkey", $"o_custkey")
@@ -1526,53 +1472,21 @@ object Formats {
       orders.filter($"o_orderkey" % 2 === 1)
         .select($"o_orderkey", $"o_custkey", $"o_totalprice")
         .write.mode("append").parquet(p)
-      p
-    })
+    }
 
   /** The pruned scan half of io_partitioned_prune, exposed so FormatsSpec
     * can assert the physical plan prunes to exactly one partition
     * directory. One partitioned rewrite per SOURCE DIR per JVM (ADVICE
     * r07: a single shared slot meant alternating dirs re-wrote every call
-    * and a concurrent caller could read another dir's data); temp dirs are
-    * registered for deletion on JVM exit.
+    * and a concurrent caller could read another dir's data).
     */
-  private val partitionedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def partitionedEventsDir(dir: String): String =
-    partitionedDirs.getOrElseUpdate(dir, {
-      val p = Files.createTempDirectory("graft-part-events")
-      sys.addShutdownHook {
-        import java.nio.file.{Files => F, Path}
-        import scala.jdk.CollectionConverters._
-        if (F.exists(p)) {
-          // close the walk stream before deleting (ADVICE r08: the stream
-          // held an open dir handle at JVM exit)
-          val walk = F.walk(p)
-          val all = try walk.iterator().asScala.toSeq finally walk.close()
-          all.sortBy((x: Path) => -x.getNameCount).foreach(F.deleteIfExists)
-        }
-      }
-      p.toString
-    })
-
   def partitionedPruneRead(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val target = partitionedEventsDir(dir)
-    // Write-once per (JVM, source dir): the marker file is created only
-    // AFTER the parquet write succeeds, so within this JVM a failed write
-    // is re-attempted on the next call. (The temp dir is per-JVM, so the
-    // marker never outlives the process — this is not a cross-crash
-    // guarantee.)
-    val marker = java.nio.file.Paths.get(target, "_graft_written")
-    synchronized {
-      if (!Files.exists(marker)) {
-        Tables.events(s, dir)
-          .withColumn("day", to_date($"ts"))
-          .write.mode("overwrite").partitionBy("day").parquet(target)
-        Files.createFile(marker)
-      }
+    val target = Scratch.memoDir("graft-part-events", dir) { p =>
+      Tables.events(s, dir)
+        .withColumn("day", to_date($"ts"))
+        .write.mode("overwrite").partitionBy("day").parquet(p)
     }
     s.read.parquet(target)
       .filter($"day" === lit("2024-01-15").cast("date"))

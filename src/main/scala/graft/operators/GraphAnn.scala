@@ -1298,14 +1298,6 @@ object GraphAnn {
   // Persisted / incremental index plumbing
   // -------------------------------------------------------------------
 
-  private[graft] def rmOnExit(p: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(p))
-    }))
-
   /** All layer edge lists as ONE parquet dataset PARTITIONED BY
     * (lvl, shard): an executor serving shard k at layer ℓ reads only
     * `edges/lvl=ℓ/shard=k`, and the layout carries any ladder height.
@@ -1401,9 +1393,6 @@ object GraphAnn {
     * join (10B pairs at 200k vectors); upper layers hold n/8^ℓ members
     * and stay exact in both modes. Removed on JVM exit.
     */
-  private val hnswIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Build a persisted index for `emb` into `p` at an explicit valve cap —
     * the core hnswIndexDir memoizes, exposed (with the cap parameterized,
     * the semBits discipline) so HnswBuildValveSpec can pin both modes and
@@ -1422,13 +1411,11 @@ object GraphAnn {
   }
 
   def hnswIndexDir(s: SparkSession, dir: String): String =
-    hnswIndexDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("sim_hnsw_persist", dir) {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-hnsw-index").toString
-      rmOnExit(p)
-      writeHnswIndex(s, Tables.embeddings(s, dir), p)
-      p
-    })
+    graft.Scratch.memoDir("graft-hnsw-index", dir) { p =>
+      graft.ColdBuilds.timed("sim_hnsw_persist", dir) {
+        writeHnswIndex(s, Tables.embeddings(s, dir), p)
+      }
+    }
 
   /** Write-once-per-(dir, JVM) DESCENT-BUILT index at ANY corpus size —
     * sim_recall_eval's serving face for the nnd method BELOW the cap
@@ -1437,20 +1424,15 @@ object GraphAnn {
     * honest build-cost row; this memo exists so the eval row prices the
     * SERVE of all four methods, with builds itemized in cold_build.
     */
-  private val nndIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def nndIndexDir(s: SparkSession, dir: String): String =
-    nndIndexDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("sim_recall_eval:nnd_index", dir) {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-nnd-index").toString
-      rmOnExit(p)
-      val nodes = hnswNodes(Tables.embeddings(s, dir)).localCheckpoint()
-      val st = ladderStats(nodes)
-      writeIndex(p, nodes, nndEdges(s, nodes, nOpt = Some(st.n)),
-        upperEdgesOf(nodes, Some(st)))
-      p
-    })
+    graft.Scratch.memoDir("graft-nnd-index", dir) { p =>
+      graft.ColdBuilds.timed("sim_recall_eval:nnd_index", dir) {
+        val nodes = hnswNodes(Tables.embeddings(s, dir)).localCheckpoint()
+        val st = ladderStats(nodes)
+        writeIndex(p, nodes, nndEdges(s, nodes, nOpt = Some(st.n)),
+          upperEdgesOf(nodes, Some(st)))
+      }
+    }
 
   /** The historical arrival split (sim_hnsw_incr's fixture convention). */
   def incrArrival(vecId: Column): Column =
@@ -1591,19 +1573,14 @@ object GraphAnn {
     * base. Reverse links make arrivals REACHABLE; forward links let the
     * walk continue through them: the batch is searchable immediately.
     */
-  private val hnswIncrDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def hnswIncrIndexDir(s: SparkSession, dir: String): String =
-    hnswIncrDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("sim_hnsw_incr", dir) {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-hnsw-incr").toString
-      rmOnExit(p)
-      val nodes = hnswNodes(Tables.embeddings(s, dir)).localCheckpoint()
-      val merged = incrMergedEdges(s, nodes)
-      writeIndex(p, nodes, merged(0), merged - 0)
-      p
-    })
+    graft.Scratch.memoDir("graft-hnsw-incr", dir) { p =>
+      graft.ColdBuilds.timed("sim_hnsw_incr", dir) {
+        val nodes = hnswNodes(Tables.embeddings(s, dir)).localCheckpoint()
+        val merged = incrMergedEdges(s, nodes)
+        writeIndex(p, nodes, merged(0), merged - 0)
+      }
+    }
 
   /** FROZEN per-shard entry points over the base corpus — the min-id half
     * of the entry derivation (the walk now derives frozen entries AND

@@ -858,7 +858,7 @@ object Multimodal {
     */
   lazy val tarShardDir: String = {
     import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
-    val root = java.nio.file.Files.createTempDirectory("graft-tar-shards")
+    val root = graft.Scratch.dir("graft-tar-shards")
     val imgs = new java.io.File(mediaDir).listFiles()
       .filter(_.getName.matches("img_\\d+\\.png")).sortBy(_.getName)
     for (shard <- 0 until TarShardCount) {
@@ -882,7 +882,7 @@ object Multimodal {
       }
       out.close()
     }
-    root.toString
+    root
   }
 
   /** Distributed webdataset PACKER (write-once per JVM): shard = doc_id %
@@ -892,11 +892,7 @@ object Multimodal {
     * (the original bytes, no re-encode) + `img_NNNN.cls` (id % 10).
     */
   def packedShardDir(s: org.apache.spark.sql.SparkSession): String =
-    packedDirs.getOrElseUpdate("packed", {
-      val root = java.nio.file.Files.createTempDirectory("graft-tar-pack").toString
-      packInto(s, root)
-      root
-    })
+    graft.Scratch.memoDir("graft-tar-pack", "packed")(packInto(s, _))
 
   /** The packer's write topology against an explicit target dir (exposed
     * so TarShardsSpec can pin run-to-run byte determinism — the property
@@ -937,9 +933,6 @@ object Multimodal {
           if (out != null) out.close()
         }
   }
-
-  private val packedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Stream one tar shard from its (possibly remote) path and assemble
     * adjacent same-basename entries into decoded samples. Exposed for

@@ -350,57 +350,34 @@ object Similarity {
     * applied to an ANN index). This is the long-lived form: the build cost
     * amortizes over every query batch served from it.
     */
-  private val ivfIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def ivfIndexDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ivfIndexDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("sim_ivf_persist", dir) {
-      import s.implicits._
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-ivf-index").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-        }
-        rm(new java.io.File(p))
-      }))
-      val e = embWithNorm(s, dir)
-      val centroids = ivfCentroids(s, dir)
-      centroids.write.mode("overwrite").parquet(s"$p/centroids")
-      ivfAssigned(e, centroids)
-        .join(e, "vec_id")
-        .select($"cluster", $"vec_id", $"v", $"nrm")
-        .write.mode("overwrite").partitionBy("cluster").parquet(s"$p/postings")
-      // Per-cluster angular radii are INDEX metadata (one K-row table) —
-      // computed here at build cost so range search never rescans the
-      // postings to re-derive them (each serve reads the K-row parquet).
-      s.read.parquet(s"$p/postings")
-        .join(broadcast(centroids), $"cluster" === $"label")
-        // cluster is a PARTITION column here: its round-trip type depends on
-        // spark.sql.sources.partitionColumnTypeInference.enabled. Pin it to
-        // int at write time so the serve path's getInt is independent of
-        // session inference settings (ADVICE r13).
-        .select($"cluster".cast("int").as("cluster"),
-          acos(least(lit(1.0), greatest(lit(-1.0),
-            Exprs.dot($"v", $"c") / ($"nrm" * $"cnrm")))).as("ang"))
-        .groupBy($"cluster").agg(max($"ang").as("radius"))
-        .write.mode("overwrite").parquet(s"$p/radii")
-      p
-    })
+    graft.Scratch.memoDir("graft-ivf-index", dir) { p =>
+      graft.ColdBuilds.timed("sim_ivf_persist", dir) {
+        import s.implicits._
+        val e = embWithNorm(s, dir)
+        val centroids = ivfCentroids(s, dir)
+        centroids.write.mode("overwrite").parquet(s"$p/centroids")
+        ivfAssigned(e, centroids)
+          .join(e, "vec_id")
+          .select($"cluster", $"vec_id", $"v", $"nrm")
+          .write.mode("overwrite").partitionBy("cluster").parquet(s"$p/postings")
+        // Per-cluster angular radii are INDEX metadata (one K-row table) —
+        // computed here at build cost so range search never rescans the
+        // postings to re-derive them (each serve reads the K-row parquet).
+        s.read.parquet(s"$p/postings")
+          .join(broadcast(centroids), $"cluster" === $"label")
+          // cluster is a PARTITION column here: its round-trip type depends on
+          // spark.sql.sources.partitionColumnTypeInference.enabled. Pin it to
+          // int at write time so the serve path's getInt is independent of
+          // session inference settings (ADVICE r13).
+          .select($"cluster".cast("int").as("cluster"),
+            acos(least(lit(1.0), greatest(lit(-1.0),
+              Exprs.dot($"v", $"c") / ($"nrm" * $"cnrm")))).as("ang"))
+          .groupBy($"cluster").agg(max($"ang").as("radius"))
+          .write.mode("overwrite").parquet(s"$p/radii")
+      }
+    }
 
-  /** Write-once-per-(dir, JVM) INCREMENTALLY-MAINTAINED IVF index — the
-    * dd_minhash_incr discipline applied to ANN serving: the coarse
-    * quantizer is trained on the BASE corpus (vec_id % 7 ≠ 3, the shared
-    * arrival convention) and then FROZEN — the published production
-    * pattern (Faiss's add-after-train contract; Jégou et al. 2011): new
-    * vectors are assigned against the frozen centroids and APPENDED to
-    * the cluster-partitioned postings, so an ingest batch costs
-    * O(batch × K) assignment + a partitioned append of batch-sized data —
-    * the corpus is never rescanned and the existing lists are never
-    * rewritten. Retraining the quantizer is a separate, rarer event
-    * (sim_kmeans_train is that operator). IvfIncrSpec pins append ≡
-    * rebuild-under-the-same-quantizer and arrival-batch-sized writes.
-    */
   /** Serve a query batch from a persisted IVF index dir (centroids/ +
     * cluster-partitioned postings/): broadcast-probe the K-row quantizer,
     * collect the ≤ queries×nprobe cluster ids (model-collect), read ONLY
@@ -439,38 +416,41 @@ object Similarity {
       .select($"query_id", $"cand_id", $"cos", $"rk".cast("long").as("rk"))
   }
 
-  private val ivfIncrDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
+  /** Write-once-per-(dir, JVM) INCREMENTALLY-MAINTAINED IVF index — the
+    * dd_minhash_incr discipline applied to ANN serving: the coarse
+    * quantizer is trained on the BASE corpus (vec_id % 7 ≠ 3, the shared
+    * arrival convention) and then FROZEN — the published production
+    * pattern (Faiss's add-after-train contract; Jégou et al. 2011): new
+    * vectors are assigned against the frozen centroids and APPENDED to
+    * the cluster-partitioned postings, so an ingest batch costs
+    * O(batch × K) assignment + a partitioned append of batch-sized data —
+    * the corpus is never rescanned and the existing lists are never
+    * rewritten. Retraining the quantizer is a separate, rarer event
+    * (sim_kmeans_train is that operator). IvfIncrSpec pins append ≡
+    * rebuild-under-the-same-quantizer and arrival-batch-sized writes.
+    */
   def ivfIncrIndexDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ivfIncrDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("sim_ivf_incr", dir) {
-      import s.implicits._
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-ivf-incr").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-        }
-        rm(new java.io.File(p))
-      }))
-      val e = embWithNorm(s, dir)
-      val base = e.filter($"vec_id" % 7 =!= 3)
-      val centroids = centroidsOf(s,
-        Tables.embeddings(s, dir).filter($"vec_id" % 7 =!= 3))
-      centroids.write.mode("overwrite").parquet(s"$p/centroids")
-      ivfAssigned(base, centroids)
-        .join(base, "vec_id")
-        .select($"cluster", $"vec_id", $"v", $"nrm")
-        .write.mode("overwrite").partitionBy("cluster").parquet(s"$p/postings")
-      // the INGEST: arrivals against the frozen quantizer, appended —
-      // cluster partitions gain files, nothing existing is rewritten
-      val arrivals = e.filter($"vec_id" % 7 === 3)
-      ivfAssigned(arrivals, centroids)
-        .join(arrivals, "vec_id")
-        .select($"cluster", $"vec_id", $"v", $"nrm")
-        .write.mode("append").partitionBy("cluster").parquet(s"$p/postings")
-      p
-    })
+    graft.Scratch.memoDir("graft-ivf-incr", dir) { p =>
+      graft.ColdBuilds.timed("sim_ivf_incr", dir) {
+        import s.implicits._
+        val e = embWithNorm(s, dir)
+        val base = e.filter($"vec_id" % 7 =!= 3)
+        val centroids = centroidsOf(s,
+          Tables.embeddings(s, dir).filter($"vec_id" % 7 =!= 3))
+        centroids.write.mode("overwrite").parquet(s"$p/centroids")
+        ivfAssigned(base, centroids)
+          .join(base, "vec_id")
+          .select($"cluster", $"vec_id", $"v", $"nrm")
+          .write.mode("overwrite").partitionBy("cluster").parquet(s"$p/postings")
+        // the INGEST: arrivals against the frozen quantizer, appended —
+        // cluster partitions gain files, nothing existing is rewritten
+        val arrivals = e.filter($"vec_id" % 7 === 3)
+        ivfAssigned(arrivals, centroids)
+          .join(arrivals, "vec_id")
+          .select($"cluster", $"vec_id", $"v", $"nrm")
+          .write.mode("append").partitionBy("cluster").parquet(s"$p/postings")
+      }
+    }
 
   /** SemDeDup's cluster-granularity valve (the q39 valve-sizing
     * discipline): the published technique keeps per-cluster size BOUNDED

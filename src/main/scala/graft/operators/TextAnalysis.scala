@@ -123,36 +123,26 @@ object TextAnalysis {
     * ta_pipeline_e2e stage then reads this table (column-pruned) instead of
     * re-tokenizing the corpus — at 100 TB this is the real topology: text
     * is touched once, stages consume stored features. The dir is removed
-    * on JVM exit (the Formats scratchRoot discipline).
+    * on JVM exit.
     */
-  private val curationDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def curationIntermediate(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    curationDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("ta_curation_intermediate", dir) {
-      import s.implicits._
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-curation-ti").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-        }
-        rm(new java.io.File(p))
-      }))
-      val st = Exprs.textStats($"text")
-      Tables.documents(s, dir)
-        .select(
-          $"doc_id",
-          Exprs.normWords($"text").as("toks"),
-          st.getField("char_len").as("char_len"),
-          st.getField("n_tokens").as("n_tokens"),
-          st.getField("n_punct").as("n_punct"),
-          st.getField("n_stop").as("n_stop"),
-          Exprs.packedTrigrams($"text").as("tgs"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+    graft.Scratch.memoDir("graft-curation-ti", dir) { p =>
+      graft.ColdBuilds.timed("ta_curation_intermediate", dir) {
+        import s.implicits._
+        val st = Exprs.textStats($"text")
+        Tables.documents(s, dir)
+          .select(
+            $"doc_id",
+            Exprs.normWords($"text").as("toks"),
+            st.getField("char_len").as("char_len"),
+            st.getField("n_tokens").as("n_tokens"),
+            st.getField("n_punct").as("n_punct"),
+            st.getField("n_stop").as("n_stop"),
+            Exprs.packedTrigrams($"text").as("tgs"))
+          .write.mode("overwrite").parquet(p)
+      }
+    }
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Scratch, Tables}
 import graft.QueryDef.sqlChecked
 
 /** Event-analytics operators over the `events` table, beyond the windowing /
@@ -461,8 +461,8 @@ object EventAnalytics {
         |                    FROM events GROUP BY user_id) t ON e.user_id = t.user_id
         |WHERE e.event_type = 'purchase' ORDER BY e.event_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val outDir = Events.streamTmpDir("ev-ss-static-out")
-      val ckDir = Events.streamTmpDir("ev-ss-static-ck")
+      val outDir = Scratch.dir("ev-ss-static-out")
+      val ckDir = Scratch.dir("ev-ss-static-ck")
       val static = Tables.events(s, dir)
         .groupBy($"user_id").agg(count(lit(1)).as("n_total"))
       Events.withStreamPartitions(s) {
@@ -573,8 +573,8 @@ object EventAnalytics {
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       import s.implicits._
       val srcDir = upsertSrcDir(s, dir)
-      val outDir = Events.streamTmpDir("ev-upsert-out")
-      val ckDir = Events.streamTmpDir("ev-upsert-ck")
+      val outDir = Scratch.dir("ev-upsert-out")
+      val ckDir = Scratch.dir("ev-upsert-ck")
       upsertStreamPass(s, srcDir, outDir, ckDir)
       upsertState(s, outDir)
         .transform(d => QueryDef.largeSort(d, $"user_id"))
@@ -825,20 +825,16 @@ object EventAnalytics {
   }
 
   /** 4-file re-layout of events for the multi-batch upsert source —
-    * write-once per source dir per JVM (the partitionedEventsDir
-    * discipline; checkpoints/outputs stay per-call, only the immutable
-    * source is shared).
+    * write-once per source dir per JVM (checkpoints/outputs stay per-call,
+    * only the immutable source is shared).
     */
-  private val upsertSrcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def upsertSrcDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    upsertSrcDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("ev_upsert_src", dir) {
-      val p = Events.streamTmpDir("ev-upsert-src")
-      Tables.events(s, dir).repartition(4)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+    Scratch.memoDir("ev-upsert-src", dir) { p =>
+      graft.ColdBuilds.timed("ev_upsert_src", dir) {
+        Tables.events(s, dir).repartition(4)
+          .write.mode("overwrite").parquet(p)
+      }
+    }
 
   /** One AvailableNow pass of the upsert stream: per-user update-mode
     * aggregate, idempotent batchId-keyed foreachBatch sink. Incremental by
@@ -871,26 +867,23 @@ object EventAnalytics {
   }
 
   /** Persisted pre-cutoff rollup for ev_incr_rollup (write-once per source
-    * dir per JVM — the Formats.partitionedEventsDir discipline). Schema
-    * carries the DECIMAL partial so the merge stays exact.
+    * dir and cutoff per JVM). Schema carries the DECIMAL partial so the
+    * merge stays exact.
     */
-  private val incrStateDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[streaming] def incrStateDir(
       s: org.apache.spark.sql.SparkSession, dir: String, cutoff: String): String =
-    incrStateDirs.getOrElseUpdate(s"$dir|$cutoff", graft.ColdBuilds.timed(s"ev_incr_rollup_state@$cutoff", dir) {
-      import s.implicits._
-      val p = java.nio.file.Files.createTempDirectory("graft-incr-state").toString
-      Tables.events(s, dir)
-        .filter($"ts" < lit(cutoff).cast("timestamp"))
-        .withColumn("day", date_format(date_trunc("day", $"ts"), "yyyy-MM-dd"))
-        .groupBy($"event_type", $"day")
-        .agg(count(lit(1)).as("n"),
-          sum($"value".cast("decimal(20,8)")).as("sv"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+    Scratch.memoDir("graft-incr-state", s"$dir|$cutoff") { p =>
+      graft.ColdBuilds.timed(s"ev_incr_rollup_state@$cutoff", dir) {
+        import s.implicits._
+        Tables.events(s, dir)
+          .filter($"ts" < lit(cutoff).cast("timestamp"))
+          .withColumn("day", date_format(date_trunc("day", $"ts"), "yyyy-MM-dd"))
+          .groupBy($"event_type", $"day")
+          .agg(count(lit(1)).as("n"),
+            sum($"value".cast("decimal(20,8)")).as("sv"))
+          .write.mode("overwrite").parquet(p)
+      }
+    }
 
   /** Materialized view over the upsert sink's batch log: last update per
     * key wins (the compaction a lakehouse MERGE target would run).
@@ -898,7 +891,7 @@ object EventAnalytics {
   private[streaming] def upsertState(
       s: org.apache.spark.sql.SparkSession, outDir: String): DataFrame = {
     import s.implicits._
-    val log = s.read.option("basePath", outDir).parquet(s"$outDir/batch=*")
+    val log = s.read.parquet(outDir) // partition discovery yields `batch`
     val latest = Window.partitionBy($"user_id").orderBy($"batch".desc)
     log.withColumn("rn", row_number().over(latest)).filter($"rn" === 1)
       .select($"user_id", $"n_events", $"total_value")

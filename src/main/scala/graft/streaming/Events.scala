@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.{QueryDef, Sessions, Tables}
+import graft.{QueryDef, Scratch, Sessions, Tables}
 import graft.QueryDef.sqlChecked
 
 /** Structured-Streaming surface over the `events` table. The reference has no
@@ -53,28 +52,6 @@ object Events {
     */
   private[streaming] def withStreamPartitions[T](s: org.apache.spark.sql.SparkSession)(body: => T): T =
     Sessions.withConf(s, StreamPartitions)(body)
-
-  /** All stream sink/checkpoint scratch dirs live under ONE per-JVM root
-    * that a shutdown hook deletes recursively. `Files.createTempDirectory`
-    * alone leaked every run's parquet sink + checkpoint into /tmp (~2 GB /
-    * 1 300 dirs accumulated over six rounds on this box) — returning
-    * `spark.read.parquet(outDir)` keeps the dir live until the caller
-    * consumes the result, so deletion has to wait for JVM exit, not query
-    * end.
-    */
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val root = Files.createTempDirectory("graft-stream-scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.io.File): Unit = {
-        val kids = p.listFiles(); if (kids != null) kids.foreach(rm); p.delete()
-      }
-      rm(root.toFile)
-    }))
-    root
-  }
-
-  private[streaming] def streamTmpDir(prefix: String): String =
-    Files.createTempDirectory(scratchRoot, prefix).toString
 
   private val batchOracle =
     """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour, event_type,
@@ -163,8 +140,8 @@ object Events {
 
     sqlChecked("ev_stream_window", closedWindowOracle) { (s, dir) =>
       import s.implicits._
-      val outDir = streamTmpDir("ev-stream-out")
-      val ckDir = streamTmpDir("ev-stream-ck")
+      val outDir = Scratch.dir("ev-stream-out")
+      val ckDir = Scratch.dir("ev-stream-ck")
       val agg = withStreamPartitions(s) { Tables.eventsStream(s, dir)
         .withWatermark("ts", "0 seconds")
         .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
@@ -203,8 +180,8 @@ object Events {
         |HAVING date_trunc('hour', MIN(ts)) + INTERVAL 1 HOUR <= (SELECT max(ts) FROM events)
         |ORDER BY hour""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val outDir = streamTmpDir("ev-card-out")
-      val ckDir = streamTmpDir("ev-card-ck")
+      val outDir = Scratch.dir("ev-card-out")
+      val ckDir = Scratch.dir("ev-card-ck")
       withStreamPartitions(s) { Tables.eventsStream(s, dir)
         .withWatermark("ts", "0 seconds")
         .groupBy(window($"ts", "1 hour").as("w"))
@@ -262,8 +239,8 @@ object Events {
         |ORDER BY hour""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.functions.KllAgg
-      val outDir = streamTmpDir("ev-kll-out")
-      val ckDir = streamTmpDir("ev-kll-ck")
+      val outDir = Scratch.dir("ev-kll-out")
+      val ckDir = Scratch.dir("ev-kll-ck")
       withStreamPartitions(s) { Tables.eventsStream(s, dir)
         .withWatermark("ts", "0 seconds")
         .groupBy(window($"ts", "1 hour").as("w"))
@@ -323,8 +300,8 @@ object Events {
         | CAST(SUM(CAST(value AS DECIMAL(20,8))) AS DOUBLE) AS total_value
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val outDir = streamTmpDir("ev-dedup-out")
-      val ckDir = streamTmpDir("ev-dedup-ck")
+      val outDir = Scratch.dir("ev-dedup-out")
+      val ckDir = Scratch.dir("ev-dedup-ck")
       withStreamPartitions(s) {
       Tables.eventsStream(s, dir).union(Tables.eventsStream(s, dir))
         .withWatermark("ts", "0 seconds")
@@ -385,8 +362,8 @@ object Events {
         | AND e.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts + INTERVAL 1 HOUR
         |ORDER BY p_id, e_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val outDir = streamTmpDir("ev-ssj-out")
-      val ckDir = streamTmpDir("ev-ssj-ck")
+      val outDir = Scratch.dir("ev-ssj-out")
+      val ckDir = Scratch.dir("ev-ssj-ck")
       withStreamPartitions(s) {
       val purchases = Tables.eventsStream(s, dir)
         .filter($"event_type" === "purchase")
@@ -437,8 +414,8 @@ object Events {
         |        (SELECT max(ts) FROM events WHERE event_type = 'error')))
         |ORDER BY p_id, e_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val outDir = streamTmpDir("ev-ssjl-out")
-      val ckDir = streamTmpDir("ev-ssjl-ck")
+      val outDir = Scratch.dir("ev-ssjl-out")
+      val ckDir = Scratch.dir("ev-ssjl-ck")
       withStreamPartitions(s) {
       val purchases = Tables.eventsStream(s, dir)
         .filter($"event_type" === "purchase")
@@ -672,8 +649,8 @@ object Events {
     // semantics, both oracle-pinned.
     sqlChecked("ev_session_window_stream", closedSessionWindowOracle) { (s, dir) =>
       import s.implicits._
-      val outDir = streamTmpDir("ev-sessw-out")
-      val ckDir = streamTmpDir("ev-sessw-ck")
+      val outDir = Scratch.dir("ev-sessw-out")
+      val ckDir = Scratch.dir("ev-sessw-ck")
       withStreamPartitions(s) {
         val q = Tables.eventsStream(s, dir)
           .withWatermark("ts", "0 seconds")
@@ -708,8 +685,8 @@ object Events {
     sqlChecked("ev_sessionize_stream", closedSessionOracle) { (s, dir) =>
       import s.implicits._
       import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-      val outDir = streamTmpDir("ev-sess-out")
-      val ckDir = streamTmpDir("ev-sess-ck")
+      val outDir = Scratch.dir("ev-sess-out")
+      val ckDir = Scratch.dir("ev-sess-ck")
       withStreamPartitions(s) {
       val src = Tables.eventsStream(s, dir)
         .withWatermark("ts", "0 seconds")
@@ -759,8 +736,8 @@ object Events {
         |SELECT user_id, CAST(rn AS BIGINT) AS n_events, event_id FROM p
         |WHERE rn % 5 = 0 ORDER BY user_id, n_events""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val outDir = streamTmpDir("ev-tws-out")
-      val ckDir = streamTmpDir("ev-tws-ck")
+      val outDir = Scratch.dir("ev-tws-out")
+      val ckDir = Scratch.dir("ev-tws-ck")
       milestoneStreamPass(s, Tables.eventsStream(s, dir), outDir, ckDir)
       s.read.parquet(outDir).orderBy($"user_id", $"n_events")
     },
@@ -791,8 +768,8 @@ object Events {
         |FROM p, m WHERE last_ts + INTERVAL 1 DAY <= mx
         |ORDER BY user_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val outDir = streamTmpDir("ev-twsi-out")
-      val ckDir = streamTmpDir("ev-twsi-ck")
+      val outDir = Scratch.dir("ev-twsi-out")
+      val ckDir = Scratch.dir("ev-twsi-ck")
       inactiveStreamPass(s, Tables.eventsStream(s, dir), outDir, ckDir)
       s.read.parquet(outDir)
         .select($"user_id", date_format($"last_purchase", TsFmt).as("last_purchase"))

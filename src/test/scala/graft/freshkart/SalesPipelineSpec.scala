@@ -31,34 +31,38 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     val empty = Files.createTempDirectory("fk-no-orders")
     val e = intercept[IllegalArgumentException](SalesPipeline.readOrders(spark, empty.toString))
     e.getMessage should include("orders_*.json")
-    Sinks.deleteRecursively(empty.toFile)
+    graft.Scratch.rm(empty.toFile)
   }
 
   test("trap 7.1.1: dedup keeps exactly ONE item line per order — first record, first item") {
     val flat = SalesPipeline.ordersFlat(SalesPipeline.readOrders(spark, fixtures))
     val (_, positive) = SalesPipeline.rejectsSplit(flat)
     val dedup = SalesPipeline.dedupFirst(positive).cache()
-    // one row per order_id
-    dedup.groupBy("order_id").count().filter(col("count") > 1).count() shouldBe 0
-    // duplicated-order fixture rows: the kept row is the lexicographically
-    // smallest created_at with pos == min pos among its positive items
-    val dupIds = positive.groupBy("order_id")
-      .agg(countDistinct(col("created_at")).as("n")).filter(col("n") > 1)
-      .select("order_id").collect().map(_.getString(0))
-    dupIds.length should be > 0
-    val firsts = positive
-      .groupBy("order_id").agg(min(struct(col("created_at"), col("pos"))).as("f"))
-      .select(col("order_id"), col("f.created_at").as("created_at"), col("f.pos").as("pos"))
-    dedup.select("order_id", "created_at", "pos")
-      .except(firsts).count() shouldBe 0
+    try {
+      // one row per order_id
+      dedup.groupBy("order_id").count().filter(col("count") > 1).count() shouldBe 0
+      // duplicated-order fixture rows: the kept row is the lexicographically
+      // smallest created_at with pos == min pos among its positive items
+      val dupIds = positive.groupBy("order_id")
+        .agg(countDistinct(col("created_at")).as("n")).filter(col("n") > 1)
+        .select("order_id").collect().map(_.getString(0))
+      dupIds.length should be > 0
+      val firsts = positive
+        .groupBy("order_id").agg(min(struct(col("created_at"), col("pos"))).as("f"))
+        .select(col("order_id"), col("f.created_at").as("created_at"), col("f.pos").as("pos"))
+      dedup.select("order_id", "created_at", "pos")
+        .except(firsts).count() shouldBe 0
+    } finally dedup.unpersist()
   }
 
   test("trap 7.1.5/P4: rejects + kept partition the exploded rows exactly") {
     val flat = SalesPipeline.ordersFlat(SalesPipeline.readOrders(spark, fixtures)).cache()
-    val (rejects, positive) = SalesPipeline.rejectsSplit(flat)
-    rejects.count() should be > 0L
-    rejects.count() + positive.count() shouldBe flat.count()
-    rejects.filter(col("item_unit_price") >= 0).count() shouldBe 0
+    try {
+      val (rejects, positive) = SalesPipeline.rejectsSplit(flat)
+      rejects.count() should be > 0L
+      rejects.count() + positive.count() shouldBe flat.count()
+      rejects.filter(col("item_unit_price") >= 0).count() shouldBe 0
+    } finally flat.unpersist()
   }
 
   test("trap 7.1.4/P5: is_active === true drops null (unknown-customer) rows") {
@@ -75,13 +79,15 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
 
   test("trap 7.1.2/7.1.3: net = gross + negative refunds; orphan refunds aggregated then dropped") {
     val daily = result.dailyCitySales.cache()
-    // refunds are negative → net <= gross everywhere, strictly less somewhere
-    daily.filter(col("net_revenue_eur") > col("gross_revenue_eur")).count() shouldBe 0
-    daily.filter(col("net_revenue_eur") < col("gross_revenue_eur")).count() should be > 0L
-    // net is exactly gross + refunds
-    daily.filter(
-      abs(col("net_revenue_eur") - (col("gross_revenue_eur") + col("refunds_eur"))) > 1e-9)
-      .count() shouldBe 0
+    try {
+      // refunds are negative → net <= gross everywhere, strictly less somewhere
+      daily.filter(col("net_revenue_eur") > col("gross_revenue_eur")).count() shouldBe 0
+      daily.filter(col("net_revenue_eur") < col("gross_revenue_eur")).count() should be > 0L
+      // net is exactly gross + refunds
+      daily.filter(
+        abs(col("net_revenue_eur") - (col("gross_revenue_eur") + col("refunds_eur"))) > 1e-9)
+        .count() shouldBe 0
+    } finally daily.unpersist()
   }
 
   test("F2: garbage refund amounts try_cast to null and fill as 0.0") {
@@ -109,7 +115,7 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     oc.count() shouldBe result.ordersClean.count()
     Files.readString(Paths.get(s"$out/sales.db.parquet/MANIFEST")).trim
       .split("\n").toSeq shouldBe Seq("daily_city_sales", "orders_clean")
-    Sinks.deleteRecursively(new java.io.File(out))
+    graft.Scratch.rm(new java.io.File(out))
   }
 
   test("golden: daily_summary_all.csv = header + per-day rows concatenated in date order") {
@@ -132,7 +138,7 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     val allLines = all.linesIterator.toSeq
     allLines.head shouldBe "date;city;channel;orders_count;unique_customers;items_sold;gross_revenue_eur;refunds_eur;net_revenue_eur"
     allLines.tail shouldBe perDay.toSeq
-    Sinks.deleteRecursively(new java.io.File(out))
+    graft.Scratch.rm(new java.io.File(out))
   }
 
   test("P4: no rejects_items.csv when no item line has a negative price") {
@@ -149,7 +155,7 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     Files.exists(Paths.get(out, "rejects_items.csv")) shouldBe false
     // the run itself completed: header + the one order's daily row
     Files.readAllLines(Paths.get(out, "daily_summary_all.csv")).size shouldBe 2
-    Sinks.deleteRecursively(in.toFile)
+    graft.Scratch.rm(in.toFile)
   }
 
   test("run releases every plan it caches (the customer dim included)") {
@@ -157,7 +163,7 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     val out = Files.createTempDirectory("fk-cache").toString
     SalesPipeline.run(spark, Config(fixtures, out, s"$out/sales.db"))
     spark.sharedState.cacheManager.isEmpty shouldBe true
-    Sinks.deleteRecursively(new java.io.File(out))
+    graft.Scratch.rm(new java.io.File(out))
   }
 
   test("run parses the orders JSON in exactly one stage") {
@@ -191,7 +197,7 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     } finally sc.removeSparkListener(listener)
     scanRows.size should be > 0
     stages.asScala.count(_.exists(scanRows.contains)) shouldBe 1
-    Sinks.deleteRecursively(new java.io.File(out))
+    graft.Scratch.rm(new java.io.File(out))
   }
 
   test("the fk_* queries leave no plan cached") {
@@ -211,25 +217,27 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     files.length shouldBe 31
     files.head shouldBe "daily_summary_20250301.csv"
     files.last shouldBe "daily_summary_20250331.csv"
-    Sinks.deleteRecursively(new java.io.File(out))
+    graft.Scratch.rm(new java.io.File(out))
   }
 
   test("partitioned parquet sink: date= subdirs, pruned scan, round-trip") {
     val out = Files.createTempDirectory("fk-part").toString + "/daily"
     val daily = result.dailyCitySales.cache()
-    Sinks.writePartitionedParquet(daily, out)
-    val dirs = new java.io.File(out).listFiles.map(_.getName).filter(_.startsWith("date=")).sorted
-    dirs.length shouldBe 31
-    dirs.head shouldBe "date=2025-03-01"
-    val back = spark.read.parquet(out)
-    back.count() shouldBe daily.count()
-    // partition pruning: a date filter scans one partition only
-    val pruned = back.filter(col("date") === "2025-03-15")
-    val prunedPlan = pruned.queryExecution.executedPlan.toString
-    prunedPlan should include("PartitionFilters")
-    prunedPlan should include("= 2025-03-15")
-    pruned.count() shouldBe daily.filter(col("date") === "2025-03-15").count()
-    Sinks.deleteRecursively(new java.io.File(out).getParentFile)
+    try {
+      Sinks.writePartitionedParquet(daily, out)
+      val dirs = new java.io.File(out).listFiles.map(_.getName).filter(_.startsWith("date=")).sorted
+      dirs.length shouldBe 31
+      dirs.head shouldBe "date=2025-03-01"
+      val back = spark.read.parquet(out)
+      back.count() shouldBe daily.count()
+      // partition pruning: a date filter scans one partition only
+      val pruned = back.filter(col("date") === "2025-03-15")
+      val prunedPlan = pruned.queryExecution.executedPlan.toString
+      prunedPlan should include("PartitionFilters")
+      prunedPlan should include("= 2025-03-15")
+      pruned.count() shouldBe daily.filter(col("date") === "2025-03-15").count()
+      graft.Scratch.rm(new java.io.File(out).getParentFile)
+    } finally daily.unpersist()
   }
 
   test("Config: yaml subset parse + relative path resolution") {

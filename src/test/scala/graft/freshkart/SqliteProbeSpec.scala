@@ -38,6 +38,6 @@ class SqliteProbeSpec extends SparkSuite with Matchers {
       spark.read.parquet(s"$dbPath.parquet/t1").count() shouldBe 2
       new String(Files.readAllBytes(Paths.get(s"$dbPath.parquet/MANIFEST"))).trim shouldBe "t1"
     }
-    Sinks.deleteRecursively(new java.io.File(out))
+    graft.Scratch.rm(new java.io.File(out))
   }
 }
