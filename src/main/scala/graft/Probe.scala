@@ -2,9 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Measurement probe over named `SparkEntry` queries at SPARK_GRAFT_SF_DIR
   * (default sf0.1), under the bench session's shuffle width (8):
@@ -22,6 +25,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *    and prints every Spark job's wall time, call site and
   *    `spark.job.description`, so the time of a labeled iterative path is
   *    attributable to its phases and each job to the line that started it.
+  *    Each pass's header counts the SQL executions it started
+  *    (`executions=N`): every eager collect, count or write is one, and
+  *    each pays its own planning and job start.
   */
 object Probe {
   private val Exchange = "Exchange (hashpartitioning|rangepartitioning|SinglePartition)"
@@ -59,7 +65,12 @@ object Probe {
   private def jobs(s: SparkSession, sfDir: String, names: Seq[String]): Unit = {
     val starts = new ConcurrentHashMap[Int, (Long, String, String)]()
     val lines = new ConcurrentLinkedQueue[String]()
+    val executions = new AtomicInteger()
     s.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+        case _ =>
+      }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val desc = Option(j.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
@@ -75,12 +86,14 @@ object Probe {
     })
     for (name <- names; (pass, label) <- Seq(1 -> "warm", 2 -> "measured")) {
       lines.clear()
+      executions.set(0)
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(s, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      println(f"===== $name pass $pass ($label) wall $wall%.2f s =====")
       // the listener bus is asynchronous: let the last job ends arrive
       Thread.sleep(500)
+      println(f"===== $name pass $pass ($label) wall $wall%.2f s " +
+        s"executions=${executions.get} =====")
       lines.forEach(l => println(l))
     }
   }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -8,15 +10,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reference, which re-reads CSV/JSON inputs to infer schemas —
   * reference `src/pyspark/pipeline_pyspark.py:94-98`). At 100 TB the parquet
   * footer read is O(files), not O(bytes); filters/projections applied by the
-  * caller are pushed into the scan by Catalyst.
+  * caller are pushed into the scan by Catalyst. Even the footer read is a
+  * Spark job, so it runs once per table version ([[parquetSchema]]).
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The schema Spark infers for the parquet table at `path`, inferred
+    * once per table version and parquet read settings (a [[Scratch.memo]]);
+    * later opens pass it with `.schema(...)` and start no footer-inference
+    * job. The key holds each data file's path, modification time and
+    * length, so a rewritten table misses the memo and is never read with a
+    * stale schema, and the session's `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` values, which change what inference
+    * yields (`events.ts` reads as BIGINT under nanosAsLong).
+    */
+  private def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => s"${f.getPath}@${f.getModificationTime}:${f.getLen}").toSeq.sorted
+    val conf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    Scratch.memo("graft-parquet-schema", (files ++ conf).mkString("\n")) {
+      spark.read.parquet(path).schema
+    }
+  }
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
@@ -58,9 +85,8 @@ object Tables {
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
     normalizeEventTs(
-      spark.readStream.schema(rawSchema)
+      spark.readStream.schema(parquetSchema(spark, s"$dir/events.parquet"))
         .option("pathGlobFilter", "events.parquet").parquet(dir))
   }
 

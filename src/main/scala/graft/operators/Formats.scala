@@ -582,6 +582,14 @@ object Formats {
     names
   }
 
+  /** What [[applyMergeV4]] committed: the matched-update, matched-delete
+    * and insert counts, the copy-on-write split of v3's files into
+    * rewritten and re-referenced, and v3's row count and exact price sum,
+    * read before the commit by the scan that finds the matches.
+    */
+  final case class MergeCommit(nUpdated: Long, nDeleted: Long, nInserted: Long,
+      rewritten: Seq[String], reused: Seq[String], v3Rows: Long, v3Price: Double)
+
   /** MERGE INTO v3 of the versioned table (copy-on-write), committing v4.
     *
     * The change source (derived from orders so the oracle can replay it):
@@ -592,27 +600,29 @@ object Formats {
     *
     * Copy-on-write FILE PRUNING is computed for real: the target is read
     * with input_file_name(), matched keys mark their containing files, and
-    * ONLY those files are rewritten — data-b.parquet (no %3=0 keys) is
-    * re-referenced byte-identical in the v4 manifest, never copied. At
-    * 100 TB this pruning step is the min/max-stats file skip every table
-    * format does before a merge; the rewrite set is O(matched files), the
-    * join is key-hashed, and the collect is file-list-sized (planning
-    * metadata, same class as the manifest itself).
+    * ONLY those files are read back and rewritten — data-b.parquet (no %3=0
+    * keys) is re-referenced byte-identical in the v4 manifest, never
+    * copied. At 100 TB this pruning step is the min/max-stats file skip
+    * every table format does before a merge; the rewrite set is O(matched
+    * files), the join is key-hashed, and the collect is file-list-sized
+    * (planning metadata, same class as the manifest itself).
     *
-    * Returns (nUpdated, nDeleted, nInserted, rewrittenFiles, reusedFiles).
+    * Two executions: the match scan, then ONE write of the rewritten rows
+    * and the inserts together (as a Delta MERGE writes them), whose insert
+    * count rides on the write as an `Observation`.
     */
   def applyMergeV4(s: org.apache.spark.sql.SparkSession, dir: String,
-      root: String): (Long, Long, Long, Seq[String], Seq[String]) = {
+      root: String): MergeCommit = {
     import s.implicits._
     val orders = Tables.orders(s, dir)
-    val updates = orders
+    // the op-tagged match keys: an update carries its new price, a delete
+    // (%8 = 1 wins the overlap) none, so every key sits under one op
+    val upd = $"o_orderkey" % 8 =!= 1
+    val matchedKeys = orders
       .filter($"o_orderkey" % 3 === 0 && $"o_orderkey" % 9 =!= 0 &&
-        $"o_orderkey" % 5 === 0 && $"o_orderkey" % 8 =!= 1)
-      .select($"o_orderkey", ($"o_totalprice" + 1000.0).as("new_price"))
-    val deletes = orders
-      .filter($"o_orderkey" % 3 === 0 && $"o_orderkey" % 9 =!= 0 &&
-        $"o_orderkey" % 8 === 1)
-      .select($"o_orderkey")
+        ($"o_orderkey" % 5 === 0 || !upd))
+      .select($"o_orderkey", upd.as("_upd"),
+        when(upd, $"o_totalprice" + 1000.0).as("new_price"))
     val inserts = orders.filter($"o_orderkey" % 3 === 2 && $"o_orderkey" % 7 === 0)
 
     val tgt = readManifestVersion(s, root, 3)
@@ -621,38 +631,66 @@ object Formats {
       // — an 8× smoke measured it as 9 of merge's 20 seconds; the split
       // is ~35× cheaper and codegen-friendly.
       .withColumn("_file", substring_index(input_file_name(), "/", -1))
-    // ONE join of the target with the op-tagged match keys answers every
-    // match gate: the files to rewrite and the update and delete counts
-    // (the key sets are disjoint: deletes win the %8 = 1 overlap)
-    val matchedKeys = updates.select($"o_orderkey", lit(true).as("_upd"))
-      .union(deletes.select($"o_orderkey", lit(false).as("_upd")))
-    val gates = tgt.join(matchedKeys, Seq("o_orderkey"))
-      .agg(sort_array(collect_set($"_file")), count(when($"_upd", 1)),
-        count(when(!$"_upd", 1)))
+    // ONE left join of the target with the match keys answers every match
+    // gate: the files to rewrite, the update and delete counts, and the
+    // pre-merge v3 stats (the keys are unique, so the join keeps v3 one to
+    // one; collect_set skips the unmatched rows' null)
+    val gates = tgt.join(matchedKeys.select($"o_orderkey", $"_upd"), Seq("o_orderkey"), "left")
+      .agg(sort_array(collect_set(when($"_upd".isNotNull, $"_file"))),
+        count(when($"_upd", 1)), count(when(!$"_upd", 1)),
+        count(lit(1)), round(dsum($"o_totalprice"), 2))
       .collect().head // file-list-sized metadata
     val rewritten = gates.getSeq[String](0)
-    val (nUpd, nDel) = (gates.getLong(1), gates.getLong(2))
     val reused = manifestLines(root, 3).filterNot(rewritten.contains)
 
-    val cols = orders.columns.map(col)
-    val newNames = rewritten.flatMap { f =>
-      val base = f.stripSuffix(".parquet")
-      val merged = tgt.filter($"_file" === f)
-        .join(deletes.withColumn("_d", lit(1)), Seq("o_orderkey"), "left")
-        .filter($"_d".isNull)
-        .join(updates, Seq("o_orderkey"), "left")
-        .withColumn("o_totalprice", coalesce($"new_price", $"o_totalprice"))
-        .select(cols: _*)
-      writeDataGroup(s, root, s"$base-m", merged) // parallel rewrite group
-    }
     // the insert count rides on the write that already scans the inserts,
     // and is read only after that write has returned
     val insObs = new org.apache.spark.sql.Observation()
-    val insNames = writeDataGroup(s, root, "data-ins",
-      inserts.observe(insObs, count(lit(1)).as("n")))
-    val nIns = insObs.get("n").asInstanceOf[Long]
-    writeManifest(root, 4, newNames ++ reused ++ insNames)
-    (nUpd, nDel, nIns, rewritten, reused)
+    val ins = inserts.observe(insObs, count(lit(1)).as("n"))
+    // the rewrite: the matched files against the same keys, deleted rows
+    // dropped and updated rows repriced, written with the inserts
+    def merged = readDataFiles(s, rewritten.map(resolveManifestLine(root, _)))
+      .join(matchedKeys, Seq("o_orderkey"), "left")
+      .filter($"_upd".isNull || $"_upd")
+      .withColumn("o_totalprice", coalesce($"new_price", $"o_totalprice"))
+      .select(orders.columns.map(col).toSeq: _*)
+    val names = writeDataGroup(s, root, "data-v4",
+      if (rewritten.isEmpty) ins else merged.union(ins))
+    writeManifest(root, 4, reused ++ names)
+    MergeCommit(gates.getLong(1), gates.getLong(2), insObs.get("n").asInstanceOf[Long],
+      rewritten, reused, gates.getLong(3), gates.getDouble(4))
+  }
+
+  /** Row count and exact price sum where `p` holds, as `<name>_n` and
+    * `<name>_p`: dsum skips nulls like a filtered sum does, so one pass
+    * answers several filtered aggregates exactly.
+    */
+  private def priceAggs(name: String, p: org.apache.spark.sql.Column = lit(true)) =
+    Seq(count(when(p, 1)).as(s"${name}_n"),
+      round(dsum(when(p, col("o_totalprice"))), 2).as(s"${name}_p"))
+
+  /** A row's (`<name>_n`, `<name>_p`) pair from [[priceAggs]]. */
+  private def priceOf(r: org.apache.spark.sql.Row, name: String): (Long, Double) =
+    (r.getAs[Long](s"${name}_n"), r.getAs[Double](s"${name}_p"))
+
+  /** Post-commit gates in ONE eager execution with ONE shuffle: the rows
+    * of every named part, tagged `_g` with its name and cut to
+    * (`o_orderkey`, `o_totalprice`) (null where a part has no such column,
+    * as a deletion vector has not), feed one global aggregate of each
+    * part's [[priceAggs]] plus the `extra` aggregates over the tagged rows.
+    * A part without rows still answers (count 0, null sum), as its own
+    * global aggregate would. Not a cross join of one-row aggregates: that
+    * broadcasts every part in a job of its own. A query returns a local
+    * frame of the answers rather than holding these reads in its plan.
+    */
+  private def gatePass(parts: Seq[(String, org.apache.spark.sql.DataFrame)],
+      extra: org.apache.spark.sql.Column*): org.apache.spark.sql.Row = {
+    val tagged = parts.map { case (name, df) =>
+      df.select(lit(name).as("_g") +: Seq("o_orderkey", "o_totalprice").map(c =>
+        if (df.columns.contains(c)) col(c) else lit(null).as(c)): _*)
+    }.reduce(_ union _)
+    val aggs = parts.flatMap { case (name, _) => priceAggs(name, col("_g") === name) } ++ extra
+    tagged.agg(aggs.head, aggs.tail: _*).collect().head
   }
 
   // MERGE INTO (the upsert+delete commit every table format exposes —
@@ -689,29 +727,20 @@ object Formats {
         |FROM merged""".stripMargin) { (s, dir) =>
       import s.implicits._
       val root = freshVersionedCopy(s, dir)
-      def v3Stats(): (Long, Double) = {
-        val r = readManifestVersion(s, root, 3)
-          .agg(count(lit(1)), round(dsum($"o_totalprice"), 2)).collect().head
-        (r.getLong(0), r.getDouble(1))
-      }
-      val before = v3Stats()
-      val (nUpd, nDel, nIns, rewritten, reused) = applyMergeV4(s, dir, root)
-      val after = v3Stats() // time travel to the pre-merge snapshot
+      val m = applyMergeV4(s, dir, root)
+      val v3 = readManifestVersion(s, root, 3) // time travel to the pre-merge snapshot
       val v4 = readManifestVersion(s, root, 4)
-      val insertKeysNew = v4.filter($"o_orderkey" % 3 === 2)
-        .join(readManifestVersion(s, root, 3), Seq("o_orderkey"))
-        .isEmpty
-      val stats = v4
-        .agg(count(lit(1)).as("n_rows_v4"),
-          round(dsum($"o_totalprice"), 2).as("sum_price_v4"))
-      stats.select($"n_rows_v4", $"sum_price_v4",
-        lit(nUpd).as("n_updated"), lit(nDel).as("n_deleted"),
-        lit(nIns).as("n_inserted"),
-        lit(rewritten.length.toLong).as("files_rewritten"),
-        lit(reused.length.toLong).as("files_reused"),
-        lit(reused == Seq("data-b.parquet")).as("reused_untouched"),
-        lit(after == before).as("old_version_unchanged"),
-        lit(insertKeysNew).as("insert_keys_new"))
+      val g = gatePass(Seq("v4" -> v4, "v3" -> v3, "ins_in_v3" ->
+        v4.filter($"o_orderkey" % 3 === 2).join(v3.select("o_orderkey"), Seq("o_orderkey"))))
+      val (n4, p4) = priceOf(g, "v4")
+      Seq((n4, p4, m.nUpdated, m.nDeleted, m.nInserted,
+        m.rewritten.length.toLong, m.reused.length.toLong,
+        m.reused == Seq("data-b.parquet"),
+        priceOf(g, "v3") == ((m.v3Rows, m.v3Price)),
+        g.getAs[Long]("ins_in_v3_n") == 0L))
+        .toDF("n_rows_v4", "sum_price_v4", "n_updated", "n_deleted", "n_inserted",
+          "files_rewritten", "files_reused", "reused_untouched",
+          "old_version_unchanged", "insert_keys_new")
     }
 
   // CHANGE DATA FEED between two pinned snapshots (Delta CDF / Iceberg
@@ -913,6 +942,13 @@ object Formats {
         $"orphans" === 0))
   }
 
+  /** What [[applyDvDeletes]] committed: the v4 and v5 vector file names,
+    * and the base snapshot's row count and exact price sum, observed on
+    * the scan that built the v4 vector.
+    */
+  final case class DvCommit(dv4: Seq[String], dv5: Seq[String],
+      baseRows: Long, basePrice: Double)
+
   /** Apply a positional DELETION-VECTOR delete (merge-on-read) to the
     * versioned table under `root`: commit v4 deleting `o_orderkey % 7 = 2`
     * and then a STACKED v5 deleting `o_orderkey % 10 = 6` among the
@@ -933,21 +969,29 @@ object Formats {
     * semantically the same pruning). Compaction later folds DVs back into
     * data files, which is exactly [[applyMergeV4]]'s rewrite path.
     *
-    * Returns (dv4 file names, dv5 file names).
+    * Two executions, one per commit: the dv4 write's unfiltered base scan
+    * also observes the base snapshot's row count and exact price sum, so
+    * the pre-commit stats cost no read of their own. Returns a
+    * [[DvCommit]].
     */
   def applyDvDeletes(s: org.apache.spark.sql.SparkSession,
-      root: String): (Seq[String], Seq[String]) = {
+      root: String): DvCommit = {
     import s.implicits._
     val dataFiles = manifestLines(root, 3)
 
     // ONE scan of the base files builds the vector: (file, pos) of every
     // row matching the delete predicate. Positions always address the
-    // immutable BASE file, so later vectors stack without rebasing.
-    def addressed = readDataFiles(s, dataFiles.map(resolveManifestLine(root, _)))
+    // immutable BASE file, so later vectors stack without rebasing. The
+    // observation sits below the filter, so it sees every base row.
+    val baseObs = new org.apache.spark.sql.Observation()
+    val baseAggs = priceAggs("base")
+    val dv4 = readDataFiles(s, dataFiles.map(resolveManifestLine(root, _)))
       .withColumn("file", substring_index(col("_metadata.file_path"), "/", -1))
       .withColumn("pos", col("_metadata.row_index"))
-    val dv4 = addressed.filter($"o_orderkey" % 7 === 2).select($"file", $"pos")
+      .observe(baseObs, baseAggs.head, baseAggs.tail: _*)
+      .filter($"o_orderkey" % 7 === 2).select($"file", $"pos")
     val dv4Names = writeDataGroup(s, root, "dv-v4", dv4)
+    val base = baseObs.get // the write has returned: its metrics are in
     writeManifest(root, 4, dataFiles ++ dv4Names.map("dv:" + _))
 
     // The second delete sees the MoR view of v4 (so a row already dead in
@@ -956,7 +1000,8 @@ object Formats {
       .filter($"o_orderkey" % 10 === 6).select($"file", $"pos")
     val dv5Names = writeDataGroup(s, root, "dv-v5", dv5)
     writeManifest(root, 5, dataFiles ++ (dv4Names ++ dv5Names).map("dv:" + _))
-    (dv4Names, dv5Names)
+    DvCommit(dv4Names, dv5Names,
+      base("base_n").asInstanceOf[Long], base("base_p").asInstanceOf[Double])
   }
 
   /** Merge-on-read snapshot read: scan the manifest's data files with
@@ -1009,35 +1054,21 @@ object Formats {
         |  TRUE AS v3_still_full""".stripMargin) { (s, dir) =>
       import s.implicits._
       val root = freshVersionedCopy(s, dir)
-      // count and exact sum over v3 where `p` holds (all rows when `p` is
-      // true): dsum skips nulls like a filtered sum does, so one
-      // conditional aggregate answers several filtered ones exactly
-      def v3Agg(ps: org.apache.spark.sql.Column*) = {
-        val aggs = ps.flatMap(p =>
-          Seq(count(when(p, 1)), round(dsum(when(p, $"o_totalprice")), 2)))
-        val r = readManifestVersion(s, root, 3).agg(aggs.head, aggs.tail: _*)
-          .collect().head
-        ps.indices.map(i => (r.getLong(2 * i), r.getDouble(2 * i + 1)))
-      }
-      val before = v3Agg(lit(true)).head
-      val (dv4Names, dv5Names) = applyDvDeletes(s, root)
-      def dvCount(names: Seq[String]): Long = readDvFiles(s, root, names).count()
-      def morAgg(v: Int) = {
-        val r = readMorVersion(s, root, v)
-          .agg(count(lit(1)), round(dsum($"o_totalprice"), 2)).collect().head
-        (r.getLong(0), r.getDouble(1))
-      }
-      val (v4n, v4sum) = morAgg(4)
-      val (v5n, v5sum) = morAgg(5)
-      // one pass over the base snapshot: v3 still reads full, and the
-      // independent predicate replay of both delete commits
-      val Seq(after, p4, p5) = v3Agg(lit(true), $"o_orderkey" % 7 =!= 2,
-        $"o_orderkey" % 7 =!= 2 && $"o_orderkey" % 10 =!= 6)
+      val c = applyDvDeletes(s, root)
+      // every post-commit gate in ONE pass: both MoR snapshots, v3 still
+      // full plus the independent predicate replay of both delete commits
+      // on its rows, and the read-back size of each vector
+      val p4 = $"_g" === "v3" && $"o_orderkey" % 7 =!= 2
+      val g = gatePass(Seq("v4" -> readMorVersion(s, root, 4),
+        "v5" -> readMorVersion(s, root, 5), "v3" -> readManifestVersion(s, root, 3),
+        "dv4" -> readDvFiles(s, root, c.dv4), "dv5" -> readDvFiles(s, root, c.dv5)),
+        priceAggs("p4", p4) ++ priceAggs("p5", p4 && $"o_orderkey" % 10 =!= 6): _*)
+      val Seq(v4, v5, p4s, p5s, v3) = Seq("v4", "v5", "p4", "p5", "v3").map(priceOf(g, _))
       def manifestData(v: Int) = manifestLines(root, v).filterNot(_.startsWith("dv:"))
-      Seq((v4n, v4sum, dvCount(dv4Names), v5n, v5sum, dvCount(dv5Names),
+      Seq((v4._1, v4._2, g.getAs[Long]("dv4_n"), v5._1, v5._2, g.getAs[Long]("dv5_n"),
         manifestData(4) == manifestData(3) && manifestData(5) == manifestData(3),
-        (v4n, v4sum) == p4 && (v5n, v5sum) == p5,
-        after == before))
+        v4 == p4s && v5 == p5s,
+        v3 == ((c.baseRows, c.basePrice))))
         .toDF("n_rows_v4", "sum_price_v4", "n_deleted_v4",
           "n_rows_v5", "sum_price_v5", "n_deleted_v5",
           "data_files_unchanged", "mor_equals_predicate", "v3_still_full")
@@ -1069,25 +1100,20 @@ object Formats {
         |  TRUE AS clone_zero_copy, TRUE AS source_unaffected""".stripMargin) { (s, dir) =>
       import s.implicits._
       val srcRoot = freshVersionedCopy(s, dir)
-      def srcAgg() = {
-        val r = readManifestVersion(s, srcRoot, 3)
-          .agg(count(lit(1)), round(dsum($"o_totalprice"), 2)).collect().head
-        (r.getLong(0), r.getDouble(1))
-      }
-      val before = srcAgg()
       // the clone: one manifest write, data lines are absolute refs
       val cloneRoot = Scratch.dir("graft-clone")
       writeManifest(cloneRoot, 3, manifestLines(srcRoot, 3).map(f => s"$srcRoot/$f"))
-      // diverge the clone (two stacked DV deletes), source untouched
-      applyDvDeletes(s, cloneRoot)
-      val clAgg = readMorVersion(s, cloneRoot, 5)
-        .agg(count(lit(1)).as("n"), round(dsum($"o_totalprice"), 2).as("p"))
-        .collect().head
-      val after = srcAgg()
+      // diverge the clone (two stacked DV deletes), source untouched; the
+      // clone's base scan reads the source's v3 files before any commit,
+      // so its observed stats are the source's "before"
+      val c = applyDvDeletes(s, cloneRoot)
+      val g = gatePass(Seq("cl" -> readMorVersion(s, cloneRoot, 5),
+        "src" -> readManifestVersion(s, srcRoot, 3)))
+      val ((cn, cp), after) = (priceOf(g, "cl"), priceOf(g, "src"))
       val zeroCopy = !new java.io.File(cloneRoot).listFiles()
         .exists(_.getName.startsWith("data-"))
-      Seq((clAgg.getLong(0), clAgg.getDouble(1), after._1, after._2,
-        zeroCopy, after == before))
+      Seq((cn, cp, after._1, after._2,
+        zeroCopy, after == ((c.baseRows, c.basePrice))))
         .toDF("n_rows_clone", "sum_price_clone",
           "n_rows_source", "sum_price_source",
           "clone_zero_copy", "source_unaffected")
@@ -1257,10 +1283,6 @@ object Formats {
       // A claims v4; B's stale claim of the same version must lose
       val aWon = tryCommitManifest(root, 4, dataFiles ++ aNames.map("dv:" + _))
       val bFirst = tryCommitManifest(root, 4, dataFiles ++ bNames.map("dv:" + _))
-      // the lost update B's stale manifest would have caused: rows A
-      // deleted that B's vector does not cover would come back to life
-      val resurrected = readDvFiles(s, root, aNames)
-        .join(readDvFiles(s, root, bNames), Seq("file", "pos"), "left_anti").count()
       // conflict resolution: REBASE against the current snapshot — the
       // delete is recomputed on v4's MoR view (rows already dead under A
       // are excluded, so the stacked vectors stay disjoint) — commit v5
@@ -1268,15 +1290,19 @@ object Formats {
         .filter($"o_orderkey" % 10 === 6).select($"file", $"pos")
       val b2Names = writeDataGroup(s, root, "dv-b2", dvB2)
       val bRetry = tryCommitManifest(root, 5, manifestLines(root, 4) ++ b2Names.map("dv:" + _))
-      val fin = readMorVersion(s, root, 5)
-        .agg(count(lit(1)), round(dsum($"o_totalprice"), 2)).collect().head
-      // serializability: the concurrent outcome equals the sequential one
-      val seq = readMorVersion(s, root, 3)
-        .filter($"o_orderkey" % 7 =!= 2 && $"o_orderkey" % 10 =!= 6)
-        .agg(count(lit(1)), round(dsum($"o_totalprice"), 2)).collect().head
-      Seq((fin.getLong(0), fin.getDouble(1),
-        aWon, !bFirst, resurrected > 0, bRetry,
-        fin.getLong(0) == seq.getLong(0) && fin.getDouble(1) == seq.getDouble(1)))
+      // one pass answers the gates: the lost update B's stale manifest
+      // would have caused (rows A deleted that B's vector does not cover
+      // come back to life), the final snapshot, and serializability — the
+      // concurrent outcome equals the sequential one
+      val g = gatePass(Seq(
+        "resurrected" -> readDvFiles(s, root, aNames)
+          .join(readDvFiles(s, root, bNames), Seq("file", "pos"), "left_anti"),
+        "fin" -> readMorVersion(s, root, 5),
+        "seq" -> readMorVersion(s, root, 3)
+          .filter($"o_orderkey" % 7 =!= 2 && $"o_orderkey" % 10 =!= 6)))
+      val fin = priceOf(g, "fin")
+      Seq((fin._1, fin._2,
+        aWon, !bFirst, g.getAs[Long]("resurrected_n") > 0, bRetry, fin == priceOf(g, "seq")))
         .toDF("n_rows_final", "sum_price_final", "a_committed",
           "b_first_rejected", "lost_update_prevented", "b_retry_committed",
           "serializable")

@@ -22,7 +22,13 @@ class DvDeleteSpec extends SparkSuite with Matchers {
     val bytesBefore = dataFiles.map(f =>
       f -> java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$root/$f")))
 
-    val (dv4Names, dv5Names) = Formats.applyDvDeletes(spark, root)
+    val v3Stats = spark.read.parquet(dataFiles.map(f => s"$root/$f"): _*)
+      .agg(count(lit(1)), round(graft.functions.ExactSum.sumScaled($"o_totalprice", 8), 2))
+      .collect().head
+    val c = Formats.applyDvDeletes(spark, root)
+    val (dv4Names, dv5Names) = (c.dv4, c.dv5)
+    // the base stats observed on the dv4 scan equal v3 aggregated directly
+    (c.baseRows, c.basePrice) shouldBe ((v3Stats.getLong(0), v3Stats.getDouble(1)))
     dv4Names.nonEmpty shouldBe true
     dv5Names.nonEmpty shouldBe true
 

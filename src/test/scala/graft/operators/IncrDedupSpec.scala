@@ -70,7 +70,7 @@ class IncrDedupSpec extends SparkSuite with Matchers {
       .coalesce(1).write.mode("append").parquet(src)
     Dedup.incrStreamPass(spark, src, None, out, ck, dir)
     batches() should be > after1 // the resume saw ONLY the added file(s)
-    val streamed = spark.read.option("basePath", out).parquet(s"$out/batch=*")
+    val streamed = spark.read.parquet(out) // partition discovery yields `batch`
       .select(col("new_doc"), col("old_doc"), col("jaccard"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val oneShot = Dedup.incrementalMinhashPairs(spark, arrivals, dir)

@@ -12,15 +12,23 @@ class MergeCdfSpec extends SparkSuite with Matchers {
 
   test("merge: copy-on-write reuses the untouched file byte-identically") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{count, lit, round}
+    import graft.functions.ExactSum
     val dir = sf("sf0.001")
     val root = java.nio.file.Files.createTempDirectory("graft-merge-spec").toString
     Formats.buildVersionedTable(spark, dir, root)
     val b = java.nio.file.Paths.get(s"$root/data-b.parquet")
     val bytesBefore = java.nio.file.Files.readAllBytes(b)
+    val v3Files = Seq("data-a2.parquet", "data-b.parquet").map(f => s"$root/$f")
+    val v3 = spark.read.parquet(v3Files: _*)
+      .agg(count(lit(1)), round(ExactSum.sumScaled($"o_totalprice", 8), 2)).collect().head
+    val m = Formats.applyMergeV4(spark, dir, root)
     val (nUpd, nDel, nIns, rewritten, reused) =
-      Formats.applyMergeV4(spark, dir, root)
+      (m.nUpdated, m.nDeleted, m.nInserted, m.rewritten, m.reused)
     rewritten shouldBe Seq("data-a2.parquet")
     reused shouldBe Seq("data-b.parquet")
+    // the pre-merge stats read on the match scan equal v3 aggregated directly
+    (m.v3Rows, m.v3Price) shouldBe ((v3.getLong(0), v3.getDouble(1)))
     java.nio.file.Files.readAllBytes(b) shouldBe bytesBefore // never copied
     // the fused match gates equal the op predicates counted on the raw table
     val orders = graft.Tables.orders(spark, dir)

@@ -1,31 +1,18 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.matchers.should.Matchers
-import graft.SparkSuite
+import graft.{SparkCounts, SparkSuite}
 
 /** Pins the versioned table's schema metadata: a snapshot read takes its
   * schema from the table root's `_schema.json`, so building the DataFrame
   * launches no Spark job (no parquet footer inference), the recorded
   * schema is the one inference would find, and a table without it fails
-  * instead of falling back to inference.
+  * instead of falling back to inference. Also pins how many SQL
+  * executions the table-format queries start while they are built: each
+  * costs its own planning and job start, so the commits and ONE pass of
+  * post-commit gates are all a query may run.
   */
 class SnapshotSchemaSpec extends SparkSuite with Matchers {
-
-  /** `body`'s value and the number of Spark jobs it started. */
-  private def counted[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try { val a = body; ListenerBusDrain(sc); (a, jobs.get) }
-    finally sc.removeSparkListener(listener)
-  }
 
   private def deletedTable(): String = {
     val root = java.nio.file.Files.createTempDirectory("graft-schema-spec").toString
@@ -36,8 +23,8 @@ class SnapshotSchemaSpec extends SparkSuite with Matchers {
 
   test("a merge-on-read snapshot is built without a job, in the data's schema") {
     val root = deletedTable()
-    val (v4, jobs) = counted(Formats.readMorVersion(spark, root, 4))
-    jobs shouldBe 0
+    val (v4, counts) = SparkCounts(spark)(Formats.readMorVersion(spark, root, 4))
+    counts.jobs shouldBe 0
     val inferred = spark.read
       .parquet(Seq("data-a2.parquet", "data-b.parquet").map(f => s"$root/$f"): _*)
     v4.drop("file", "pos").schema shouldBe inferred.schema
@@ -49,5 +36,17 @@ class SnapshotSchemaSpec extends SparkSuite with Matchers {
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/_schema.json"))
     val e = the[IllegalStateException] thrownBy Formats.readMorVersion(spark, root, 4)
     e.getMessage should include("_schema.json")
+  }
+
+  test("io_merge and io_dv_delete are built in three SQL executions each") {
+    val dir = sf("sf0.001")
+    // merge: the match scan, one write of rewrites and inserts, one gate
+    // pass; dv delete: two vector writes, one gate pass
+    for (q <- Seq("io_merge", "io_dv_delete")) {
+      val build = graft.SparkEntry.queries(q)
+      build(spark, dir) // warm: the shared fixture and the orders schema memo
+      val (_, counts) = SparkCounts(spark)(build(spark, dir))
+      withClue(q)(counts.executions shouldBe 3)
+    }
   }
 }

@@ -109,9 +109,8 @@ class LateAuditSpec extends SparkSuite with Matchers {
       .start()
     q.awaitTermination()
 
-    val streamed = spark.read.option("basePath", out).parquet(s"$out/batch=*")
-      .withColumn("b", regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("long"))
-      .groupBy(col("ws")).agg(max_by(col("n"), col("b")).as("n"))
+    val streamed = spark.read.parquet(out) // partition discovery yields `batch`
+      .groupBy(col("ws")).agg(max_by(col("n"), col("batch")).as("n"))
       .collect().map(r => (r.getTimestamp(0).toString, r.getLong(1))).toSet
 
     val survivors = frame
